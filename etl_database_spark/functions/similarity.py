@@ -154,8 +154,9 @@ def _dot_plane_sql(vec_col: str, plane: list[float]) -> str:
     """SQL text for ``dot(col, literal plane)`` — mirrors :func:`dot`
     exactly: cast-to-double transforms on both sides, product zip,
     left-to-right double fold. ``D`` suffixes keep the literals DOUBLE
-    (a bare ``1.0`` parses as DECIMAL and would change result types)."""
-    lits = "array(" + ", ".join(f"{x:.1f}D" for x in plane) + ")"
+    (a bare ``1.0`` parses as DECIMAL and would change result types);
+    ``repr`` keeps every entry exact, not only ±1.0."""
+    lits = "array(" + ", ".join(f"{float(x)!r}D" for x in plane) + ")"
     return (
         f"aggregate(zip_with(transform(`{vec_col}`, x -> CAST(x AS DOUBLE)), "
         f"transform({lits}, x -> CAST(x AS DOUBLE)), (x, y) -> x * y), "

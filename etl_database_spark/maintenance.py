@@ -49,27 +49,9 @@ def compact_table(spark: SparkSession, path: str, target_files: int = 8) -> int:
     before = sum(len(files) for _, _, files in os.walk(path))
     df = spark.read.option("mergeSchema", "true").parquet(path)
     partition_cols = [c for c in _layout_partition_cols(path) if c in df.columns]
-    compacted = df.repartition(target_files)
-    tmp_written = compacted
-    if partition_cols:
-        # preserve partitioning layout
-        _atomic_overwrite_partitioned(tmp_written, path, partition_cols)
-    else:
-        _atomic_overwrite(tmp_written, path)
+    # the rewrite keeps the partitioning layout
+    _atomic_overwrite(df.repartition(target_files), path, partition_cols)
     return before
-
-
-def _atomic_overwrite_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    import shutil
-    import uuid
-
-    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-    old = f"{path}.old.{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def table_stats_snapshot(

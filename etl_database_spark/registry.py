@@ -11,16 +11,32 @@ invariant (onboarding/sql/dataset_setup.sql):
   NOTHING lookups, generic_import.py:214-243);
 - **single-active invariant**: at most one active row per (label,
   datasettypeid, datasetdate). The reference enforces it with an AFTER
-  INSERT trigger (dataset_setup.sql:193-216); Spark has no triggers, so
-  the write path recomputes the invariant on every registration with a
-  window over the affected keys (SURVEY.md W2) and rewrites the
-  registry atomically (write-new-then-swap on Parquet).
+  INSERT trigger (dataset_setup.sql:193-216) inside the insert's own
+  small transaction.
 
-Storage is a Parquet directory; the registry is small (one row per
-import), so full-rewrite semantics are fine at any realistic cardinality
-— 100 TB of *data* is still only ~10⁵ snapshots. Data tables reference
-``datasetid`` and are partitioned by ``datasetdate``, so active-snapshot
-queries prune partitions.
+Every registry write is one driver-side read-modify-write with
+pyarrow and starts no Spark job: read the registry table, apply the
+change, re-derive the invariant over the active rows with one
+group-by-key pass (SURVEY.md W2), write one Parquet file into a temp
+directory and swap it in, so readers never see a half-written registry.
+The table is a few hundred rows, so a Spark job per step (an aggregate
+for ``max(datasetid)``, a window shuffle, a ``coalesce(1)`` write)
+would cost far more than the work itself. Reads stay Spark:
+``datasets()`` and ``active()`` return DataFrames over the same
+directory, so SQL consumers and report views join against it.
+
+The registry is small (one row per import), so full-rewrite semantics
+are fine at any realistic cardinality — 100 TB of *data* is still only
+~10⁵ snapshots. Data tables reference ``datasetid`` and are partitioned
+by ``datasetdate``, so active-snapshot queries prune partitions.
+
+Timestamps are stored as UTC instants (``timestamp[us, UTC]``, which
+Spark reads as TimestampType; a naive Arrow timestamp would read back
+as TimestampNTZ). Naive datetimes such as ``FAR_FUTURE`` are local
+time, as PySpark's TimestampType conversion reads them, so they are
+converted with ``astimezone``. Registries written by the earlier Spark
+writer carry INT96 timestamps; they are read at microsecond unit,
+because 9999-01-01 overflows nanoseconds.
 """
 
 from __future__ import annotations
@@ -31,8 +47,10 @@ import os
 import shutil
 import uuid
 
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -58,6 +76,28 @@ DATASET_SCHEMA = T.StructType(
     ]
 )
 
+_ARROW_TYPES = {
+    T.LongType(): pa.int64(),
+    T.IntegerType(): pa.int32(),
+    T.StringType(): pa.string(),
+    T.DateType(): pa.date32(),
+    T.BooleanType(): pa.bool_(),
+    T.TimestampType(): pa.timestamp("us", tz="UTC"),
+}
+_DATASET_ARROW = pa.schema(
+    [pa.field(f.name, _ARROW_TYPES[f.dataType], f.nullable) for f in DATASET_SCHEMA]
+)
+_PARQUET = pads.ParquetFileFormat(
+    read_options=pads.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+)
+
+
+def _utc(ts: dt.datetime) -> dt.datetime:
+    """A naive local datetime as a UTC instant. pyarrow takes the wall
+    clock of an aware datetime as UTC whatever its offset, so the value
+    is normalised to UTC before it reaches Arrow."""
+    return ts.astimezone(dt.timezone.utc)
+
 
 class DatasetRegistry:
     """Parquet-backed dataset registry with versioned registration."""
@@ -71,23 +111,12 @@ class DatasetRegistry:
         os.makedirs(root, exist_ok=True)
 
     # -- lookups ---------------------------------------------------------
-    def _read_lookup(self, path: str, id_col: str, name_col: str) -> DataFrame:
-        if os.path.exists(path):
-            return self.spark.read.parquet(path)
-        schema = T.StructType(
-            [
-                T.StructField(id_col, T.IntegerType(), False),
-                T.StructField(name_col, T.StringType(), False),
-            ]
-        )
-        return self.spark.createDataFrame([], schema)
-
-    # ensure_lookup collects the entire lookup table per call, which is
+    # ensure_lookup reads the entire lookup table per call, which is
     # only sound because these tables are configuration-cardinality
     # (dataset types / data sources: one row per configured pipeline,
     # tens of rows). The cap below makes that invariant executable —
     # routing per-row or per-file data through a lookup would otherwise
-    # silently become a driver-side collect of unbounded data at scale.
+    # silently become a driver-side read of unbounded data at scale.
     MAX_LOOKUP_ROWS = 10_000
 
     def ensure_lookup(self, path: str, id_col: str, name_col: str, name: str) -> int:
@@ -97,19 +126,20 @@ class DatasetRegistry:
         Lookup tables must stay configuration-sized (see
         MAX_LOOKUP_ROWS); this is not a general-purpose dimension
         writer."""
-        # One capped collect serves both the guard and the lookup —
-        # the limit keeps a mis-routed huge table from reaching the
-        # driver, and the row count past the cap is the error signal.
-        rows = self._read_lookup(path, id_col, name_col).limit(
-            self.MAX_LOOKUP_ROWS + 1
-        ).collect()
-        if len(rows) > self.MAX_LOOKUP_ROWS:
+        schema = pa.schema(
+            [pa.field(id_col, pa.int32(), False), pa.field(name_col, pa.string(), False)]
+        )
+        # One capped read serves both the guard and the lookup — the
+        # limit keeps a mis-routed huge table off the driver, and the
+        # row count past the cap is the error signal.
+        table = _read_arrow(path, schema, limit=self.MAX_LOOKUP_ROWS + 1)
+        if table.num_rows > self.MAX_LOOKUP_ROWS:
             raise ValueError(
                 f"lookup table {path} exceeds MAX_LOOKUP_ROWS="
                 f"{self.MAX_LOOKUP_ROWS}; ensure_lookup is for "
                 "configuration-cardinality tables only"
             )
-        existing = {r[name_col]: r[id_col] for r in rows}
+        existing = dict(zip(table[name_col].to_pylist(), table[id_col].to_pylist()))
         if name not in existing and len(existing) >= self.MAX_LOOKUP_ROWS:
             raise ValueError(
                 f"lookup table {path} is at MAX_LOOKUP_ROWS="
@@ -119,11 +149,10 @@ class DatasetRegistry:
         if name in existing:
             return existing[name]
         new_id = (max(existing.values()) + 1) if existing else 1
-        updated = existing | {name: new_id}
-        out = self.spark.createDataFrame(
-            [Row(**{id_col: v, name_col: k}) for k, v in sorted(updated.items(), key=lambda x: x[1])]
+        updated = sorted((existing | {name: new_id}).items(), key=lambda x: x[1])
+        _write_arrow(
+            pa.Table.from_pylist([{id_col: v, name_col: k} for k, v in updated], schema), path
         )
-        _atomic_overwrite(out.coalesce(1), path)
         return new_id
 
     def ensure_type(self, name: str) -> int:
@@ -137,6 +166,12 @@ class DatasetRegistry:
         if os.path.exists(self.path):
             return self.spark.read.parquet(self.path)
         return self.spark.createDataFrame([], DATASET_SCHEMA)
+
+    def _rows(self) -> list[dict]:
+        return _read_arrow(self.path, _DATASET_ARROW).to_pylist()
+
+    def _write_rows(self, rows: list[dict]) -> None:
+        _write_arrow(pa.Table.from_pylist(rows, _DATASET_ARROW), self.path)
 
     def register_snapshot(
         self,
@@ -157,33 +192,9 @@ class DatasetRegistry:
         siblings is tied to activation (here, or via
         ``set_status('Active')``, the f_dataset_iu shape).
         """
-        now = dt.datetime.now()
-        current = self.datasets()
-        max_id = current.agg(F.max("datasetid")).first()[0] or 0
-        is_active = datastatusid == STATUS_ID["Active"]
-        new_row = self.spark.createDataFrame(
-            [
-                Row(
-                    datasetid=max_id + 1,
-                    datasetdate=datasetdate,
-                    label=label,
-                    datasettypeid=datasettypeid,
-                    datasourceid=datasourceid,
-                    datastatusid=datastatusid,
-                    efffromdate=now,
-                    effthrudate=FAR_FUTURE,
-                    isactive=is_active,
-                    createddate=now,
-                    createdby=createdby or getpass.getuser(),
-                )
-            ],
-            DATASET_SCHEMA,
-        )
-        merged = current.unionByName(new_row)
-        if is_active:
-            merged = _enforce_single_active(merged, now)
-        _atomic_overwrite(merged.coalesce(1), self.path)
-        return max_id + 1
+        return self._register(
+            [(datasetdate, label)], datasettypeid, datasourceid, datastatusid, createdby
+        )[0]
 
     def register_snapshots(
         self,
@@ -195,36 +206,48 @@ class DatasetRegistry:
     ) -> dict[tuple[str, dt.date], int]:
         """Batch form of register_snapshot: k snapshots, ONE registry
         rewrite (the bulk-ingest path registers one key per distinct
-        (label, date) — k separate rewrites would be k full jobs for a
-        single logical transaction). Returns {(label, date): id}."""
+        (label, date) in a single logical transaction). Returns
+        {(label, date): id}."""
         if not entries:
             return {}
-        now = dt.datetime.now()
-        current = self.datasets()
-        max_id = current.agg(F.max("datasetid")).first()[0] or 0
+        ids = self._register(entries, datasettypeid, datasourceid, datastatusid, createdby)
+        return {(label, d): i for (d, label), i in zip(entries, ids)}
+
+    def _register(
+        self,
+        entries: list[tuple[dt.date, str]],
+        datasettypeid: int,
+        datasourceid: int,
+        datastatusid: int,
+        createdby: str | None,
+    ) -> list[int]:
+        now = dt.datetime.now(dt.timezone.utc)
+        rows = self._rows()
+        first = max((r["datasetid"] for r in rows), default=0) + 1
+        ids = list(range(first, first + len(entries)))
         by = createdby or getpass.getuser()
         is_active = datastatusid == STATUS_ID["Active"]
-        rows = [
-            Row(
-                datasetid=max_id + 1 + i,
+        far_future = _utc(FAR_FUTURE)
+        rows += [
+            dict(
+                datasetid=i,
                 datasetdate=d,
                 label=label,
                 datasettypeid=datasettypeid,
                 datasourceid=datasourceid,
                 datastatusid=datastatusid,
                 efffromdate=now,
-                effthrudate=FAR_FUTURE,
+                effthrudate=far_future,
                 isactive=is_active,
                 createddate=now,
                 createdby=by,
             )
-            for i, (d, label) in enumerate(entries)
+            for i, (d, label) in zip(ids, entries)
         ]
-        merged = current.unionByName(self.spark.createDataFrame(rows, DATASET_SCHEMA))
         if is_active:
-            merged = _enforce_single_active(merged, now)
-        _atomic_overwrite(merged.coalesce(1), self.path)
-        return {(label, d): max_id + 1 + i for i, (d, label) in enumerate(entries)}
+            _enforce_single_active(rows, now)
+        self._write_rows(rows)
+        return ids
 
     def active(self) -> DataFrame:
         """Active datasets only (the is_active filters of
@@ -238,39 +261,27 @@ class DatasetRegistry:
         siblings — the single-active invariant lives on the activation
         path, mirroring the reference's WHEN NEW.isactive trigger."""
         sid = STATUS_ID[status]
-        now = dt.datetime.now()
-        updated = self.datasets().withColumn(
-            "datastatusid",
-            F.when(F.col("datasetid") == datasetid, F.lit(sid)).otherwise(F.col("datastatusid")),
-        ).withColumn(
-            "isactive",
-            F.when(F.col("datasetid") == datasetid, F.lit(status == "Active")).otherwise(
-                F.col("isactive")
-            ),
-        )
-        if status == "Active":
-            # Re-activation re-opens the row's effective range before the
-            # invariant pass closes out the displaced siblings.
-            updated = updated.withColumn(
-                "effthrudate",
-                F.when(F.col("datasetid") == datasetid, F.lit(FAR_FUTURE)).otherwise(
-                    F.col("effthrudate")
-                ),
-            )
-            updated = _enforce_single_active(updated, now, winner_id=datasetid)
-        else:
-            # Deactivation closes the effective range exactly like the
-            # displacement path — an isactive=false row with an open
-            # effthrudate would still satisfy point-in-time range
-            # predicates forever.
-            updated = updated.withColumn(
-                "effthrudate",
-                F.when(
-                    (F.col("datasetid") == datasetid) & (F.col("effthrudate") > F.lit(now)),
-                    F.lit(now),
-                ).otherwise(F.col("effthrudate")),
-            )
-        _atomic_overwrite(updated.coalesce(1), self.path)
+        activate = status == "Active"
+        now = dt.datetime.now(dt.timezone.utc)
+        rows = self._rows()
+        for r in rows:
+            if r["datasetid"] != datasetid:
+                continue
+            r["datastatusid"] = sid
+            r["isactive"] = activate
+            if activate:
+                # Re-activation re-opens the row's effective range before
+                # the invariant pass closes out the displaced siblings.
+                r["effthrudate"] = _utc(FAR_FUTURE)
+            elif r["effthrudate"] > now:
+                # Deactivation closes the effective range exactly like the
+                # displacement path — an isactive=false row with an open
+                # effthrudate would still satisfy point-in-time range
+                # predicates forever.
+                r["effthrudate"] = now
+        if activate:
+            _enforce_single_active(rows, now, winner_id=datasetid)
+        self._write_rows(rows)
 
     def status_table(self) -> DataFrame:
         return self.spark.createDataFrame(
@@ -278,48 +289,74 @@ class DatasetRegistry:
         )
 
 
-def _enforce_single_active(df: DataFrame, now: dt.datetime, winner_id: int | None = None) -> DataFrame:
-    """At most one active row per (label, datasettypeid, datasetdate):
-    losers get isactive=false, effthrudate=now. The winner is the
-    explicitly-activated row when ``winner_id`` is given (set_status
+def _enforce_single_active(rows: list[dict], now: dt.datetime, winner_id: int | None = None) -> None:
+    """At most one active row per (label, datasettypeid, datasetdate),
+    in place: losers get isactive=false, effthrudate=now. The winner is
+    the explicitly-activated row when ``winner_id`` is given (set_status
     path), else the most recent active row (register path)."""
-    # Active rows MUST rank before inactive ones: a newer inactive
-    # sibling (an Empty/Failed re-delivery) would otherwise take rank 1
-    # and silently deactivate the key's active snapshot on the next
-    # unrelated enforcement pass.
-    if winner_id is not None:
-        order = [
-            F.desc(F.col("datasetid") == winner_id),
-            F.desc("isactive"),
-            F.desc("efffromdate"),
-            F.desc("datasetid"),
-        ]
-    else:
-        order = [F.desc("isactive"), F.desc("efffromdate"), F.desc("datasetid")]
-    w = W.partitionBy("label", "datasettypeid", "datasetdate").orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .withColumn("_still_active", F.col("isactive") & (F.col("_rn") == 1))
-        .withColumn(
-            "effthrudate",
-            F.when(F.col("isactive") & ~F.col("_still_active"), F.lit(now)).otherwise(
-                F.col("effthrudate")
-            ),
-        )
-        .withColumn("isactive", F.col("_still_active"))
-        .drop("_rn", "_still_active")
-    )
+    # Only active rows compete: a newer inactive sibling (an Empty/Failed
+    # re-delivery) must never displace the key's active snapshot on a
+    # later unrelated enforcement pass.
+    def key(r: dict) -> tuple:
+        return r["label"], r["datasettypeid"], r["datasetdate"]
+
+    def rank(r: dict) -> tuple:
+        return r["datasetid"] == winner_id, r["efffromdate"], r["datasetid"]
+
+    winners: dict[tuple, dict] = {}
+    for r in rows:
+        if r["isactive"] and (key(r) not in winners or rank(r) > rank(winners[key(r)])):
+            winners[key(r)] = r
+    for r in rows:
+        if r["isactive"] and winners[key(r)] is not r:
+            r["isactive"] = False
+            r["effthrudate"] = now
 
 
-def _atomic_overwrite(df: DataFrame, path: str) -> None:
-    """Write to a temp dir then swap — readers never see a half-written
-    registry (Parquet has no transactions; the registry is the one
-    place we need read-modify-write)."""
-    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
+def _read_arrow(path: str, schema: pa.Schema, limit: int | None = None) -> pa.Table:
+    """A small Parquet table on the driver, cast to ``schema`` (this
+    also reinterprets the INT96 timestamps of Spark-written files as
+    the UTC instants they hold); empty when ``path`` does not exist.
+    Spark's ``_SUCCESS`` and ``.crc`` files are skipped by their
+    prefixes."""
+    if not os.path.exists(path):
+        return schema.empty_table()
+    data = pads.dataset(path, format=_PARQUET)
+    table = data.to_table() if limit is None else data.head(limit)
+    return table.select(schema.names).cast(schema)
+
+
+def _write_arrow(table: pa.Table, path: str) -> None:
+    """One part file into a temp dir, swapped in for ``path``. No Arrow
+    schema in the footer: Spark reads the Parquet schema alone, and the
+    file stays the size Spark's own writer would make it."""
+    tmp = _tmp_path(path)
+    os.makedirs(tmp)
+    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"), store_schema=False)
+    _swap_in(tmp, path)
+
+
+def _atomic_overwrite(df: DataFrame, path: str, partition_cols: list[str] | None = None) -> None:
+    """Spark-write ``df`` to a temp dir, then swap it in for ``path``
+    (optionally hive-partitioned by ``partition_cols``)."""
+    tmp = _tmp_path(path)
+    writer = df.write.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(tmp)
+    _swap_in(tmp, path)
+
+
+def _tmp_path(path: str) -> str:
+    return f"{path}.tmp.{uuid.uuid4().hex[:8]}"
+
+
+def _swap_in(tmp: str, path: str) -> None:
+    """Replace ``path`` by the fully written directory ``tmp`` — readers
+    never see a half-written table (Parquet has no transactions; the
+    registry is the one place we need read-modify-write)."""
     old = f"{path}.old.{uuid.uuid4().hex[:8]}"
     if os.path.exists(path):
         os.rename(path, old)
     os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -79,17 +79,19 @@ def run_once(
         ]
         type_id = registry.ensure_type(config.datasettype)
         source_id = registry.ensure_source(config.datasource)
-        id_map = {
-            (label, d): registry.register_snapshot(d, label, type_id, source_id)
-            for label, d in keys
-        }
+        # one registry rewrite for all of the batch's keys
+        id_map = registry.register_snapshots([(d, label) for label, d in keys], type_id,
+                                             source_id)
         mapping = batch_df.sparkSession.createDataFrame(
             [(label, d, i) for (label, d), i in id_map.items()],
             "label string, datasetdate date, datasetid long",
         )
         out = batch_df.join(F.broadcast(mapping), ["label", "datasetdate"]).drop("label")
-        table.append(out, config.import_strategy)
-        counts["rows"] += out.count()
+        # rows counted during the append job; a count() afterwards would
+        # execute the batch a second time
+        obs = Observation()
+        table.append(out.observe(obs, F.count(F.lit(1)).alias("rows")), config.import_strategy)
+        counts["rows"] += obs.get["rows"]
 
     q = (
         stream.writeStream.foreachBatch(handle_batch)

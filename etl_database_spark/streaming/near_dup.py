@@ -41,6 +41,13 @@ from etl_database_spark.functions.dedup import (
 )
 
 
+def _committed(batch_dir: str) -> bool:
+    """Whether a batch dir holds at least one written Parquet file."""
+    return os.path.isdir(batch_dir) and any(
+        f.endswith(".parquet") for f in os.listdir(batch_dir)
+    )
+
+
 class SignatureStore:
     """Parquet-backed MinHash signature store: one row per document,
     wide sig columns. The band table is derived on read (k xxhash64
@@ -90,13 +97,14 @@ class SignatureStore:
             f.write(stream_id)
 
     def _batch_dirs(self) -> list[str]:
+        """Committed batch dirs only: a dir holding no ``.parquet``
+        (an empty micro-batch's write leaves just ``_SUCCESS``) is not
+        a readable batch."""
         if not os.path.isdir(self.path):
             return []
-        return [
-            os.path.join(self.path, d)
-            for d in os.listdir(self.path)
-            if d.startswith("batch=")
-        ]
+        dirs = (os.path.join(self.path, d) for d in os.listdir(self.path)
+                if d.startswith("batch="))
+        return [p for p in dirs if _committed(p)]
 
     def exists(self) -> bool:
         return bool(self._batch_dirs())
@@ -118,11 +126,7 @@ class SignatureStore:
         this replaces a cache+count per micro-batch), or None when the
         write produced no rows (empty micro-batch)."""
         p = os.path.join(self.path, f"batch={batch_id}")
-        if not os.path.isdir(p) or not any(
-            f.endswith(".parquet") for f in os.listdir(p)
-        ):
-            return None
-        return self.spark.read.parquet(p)
+        return self.spark.read.parquet(p) if _committed(p) else None
 
     def append(self, sigs: DataFrame, batch_id: int = 0) -> None:
         # overwrite-by-batch-id = idempotent under foreachBatch replay

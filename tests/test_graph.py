@@ -1,6 +1,14 @@
 """PageRank: distributed implementation vs dense power iteration."""
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import pytest
+
+
+def _round_half_up(x: float, places: int) -> float:
+    """Spark's ROUND on a DOUBLE: HALF_UP on the value's shortest decimal
+    form. Python's round() rounds half to even, so a tie would differ."""
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP))
 
 
 def _dense_pagerank(edges, damping=0.85, iters=60):
@@ -231,7 +239,7 @@ def test_minhash_edge_store_equals_one_shot(spark):
         ]
         d = table(spark, sf, "documents")
         one = sorted(
-            (r.id_a, r.id_b, round(r.jaccard, 4))
+            (r.id_a, r.id_b, _round_half_up(r.jaccard, 4))
             for r in D.minhash_near_duplicates(
                 d, "text", "doc_id", sigs=L._minhash_sigs(spark, sf),
                 **L._MINHASH_PARAMS,

@@ -1,8 +1,18 @@
 import datetime as dt
+import os
+import time
+import uuid
 
+import pyarrow.parquet as pq
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from etl_database_spark.registry import STATUS_ID, DatasetRegistry
+from etl_database_spark.registry import (
+    DATASET_SCHEMA,
+    FAR_FUTURE,
+    STATUS_ID,
+    DatasetRegistry,
+)
 
 
 def test_lookup_idempotent(spark, tmp_path):
@@ -175,3 +185,103 @@ def test_bench_headline_queries_are_registered():
     registry = load_all()
     missing = [n for n in HEADLINE if n not in registry]
     assert not missing, f"headline queries missing from registry: {missing}"
+
+
+def test_datasets_types_match_schema(spark, tmp_path):
+    """The driver-side writer stores Spark's own types: timestamps read
+    back as TimestampType (not TimestampNTZ), ids as bigint/int. Parquet
+    reads are always nullable, so only names and types are compared."""
+    reg = DatasetRegistry(spark, str(tmp_path / "registry"))
+    t = reg.ensure_type("T")
+    reg.register_snapshot(dt.date(2025, 3, 1), "evt", t)
+    assert reg.datasets().dtypes == [(f.name, f.dataType.simpleString()) for f in DATASET_SCHEMA]
+
+
+def test_legacy_spark_written_registry_is_updated(spark, tmp_path):
+    """A registry directory written by Spark (INT96 timestamps, a
+    ``_SUCCESS`` marker, ``.crc`` files, bigint lookup ids) is read,
+    updated and read back with FAR_FUTURE intact; 9999-01-01 overflows
+    nanosecond INT96 decoding, so this pins the microsecond read."""
+    reg = DatasetRegistry(spark, str(tmp_path / "registry"))
+    d = dt.date(2025, 3, 1)
+    created = dt.datetime(2025, 3, 1, 12, 30, 15, 123456)
+    legacy = [
+        Row(datasetid=1, datasetdate=d, label="evt", datasettypeid=1, datasourceid=1,
+            datastatusid=STATUS_ID["Active"], efffromdate=created, effthrudate=FAR_FUTURE,
+            isactive=True, createddate=created, createdby="etl"),
+        Row(datasetid=2, datasetdate=d, label="other", datasettypeid=1, datasourceid=1,
+            datastatusid=STATUS_ID["Active"], efffromdate=created, effthrudate=FAR_FUTURE,
+            isactive=True, createddate=created, createdby="etl"),
+    ]
+    key = "spark.sql.parquet.outputTimestampType"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        spark.createDataFrame(legacy, DATASET_SCHEMA).coalesce(1).write.parquet(reg.path)
+        spark.createDataFrame([Row(datasettypeid=1, datasettype="T")]).coalesce(1).write.parquet(
+            os.path.join(reg.root, "dataset_type")
+        )
+    finally:
+        spark.conf.set(key, before)
+    names = os.listdir(reg.path)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    part = next(n for n in names if n.endswith(".parquet"))
+    schema = pq.read_metadata(os.path.join(reg.path, part)).schema
+    assert schema.column(schema.names.index("effthrudate")).physical_type == "INT96"
+
+    assert reg.ensure_type("T") == 1 and reg.ensure_type("U") == 2
+    new_id = reg.register_snapshot(d, "evt", 1)  # supersedes id 1
+    reg.set_status(2, "Inactive")
+    rows = {r.datasetid: r for r in reg.datasets().collect()}
+    assert new_id == 3 and set(rows) == {1, 2, 3}
+    assert rows[3].isactive and rows[3].effthrudate == FAR_FUTURE
+    assert not rows[1].isactive and rows[1].effthrudate < FAR_FUTURE
+    assert rows[1].efffromdate == created and rows[1].createddate == created
+    assert not rows[2].isactive and rows[2].effthrudate < FAR_FUTURE
+
+
+def test_timestamps_round_trip_in_local_time(spark, tmp_path, monkeypatch):
+    """PySpark reads naive datetimes as local time; the registry must
+    store them the same way, so FAR_FUTURE and the registration time
+    read back unchanged under zones on both sides of UTC."""
+    for i, tz in enumerate(("America/Los_Angeles", "Asia/Kolkata")):
+        monkeypatch.setenv("TZ", tz)
+        time.tzset()
+        try:
+            reg = DatasetRegistry(spark, str(tmp_path / f"registry{i}"))
+            t = reg.ensure_type("T")
+            lo = dt.datetime.now()
+            did = reg.register_snapshot(dt.date(2025, 3, 1), "evt", t)
+            staged = reg.register_snapshot(dt.date(2025, 3, 1), "evt", t,
+                                           datastatusid=STATUS_ID["New"])
+            reg.set_status(staged, "Active")
+            hi = dt.datetime.now()
+            rows = {r.datasetid: r for r in reg.datasets().collect()}
+            assert rows[staged].effthrudate == FAR_FUTURE, tz
+            assert lo <= rows[did].efffromdate <= rows[did].effthrudate <= hi, tz
+            assert lo <= rows[staged].createddate <= hi, tz
+        finally:
+            monkeypatch.undo()
+            time.tzset()
+
+
+def test_registry_writes_start_no_spark_jobs(spark, tmp_path):
+    """Registry writes are driver-side Arrow read-modify-writes: none of
+    them starts a Spark job. The job group is checked to be live by a
+    Spark read under it afterwards."""
+    sc = spark.sparkContext
+    reg = DatasetRegistry(spark, str(tmp_path / "registry"))
+    group = f"registry-writes-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "registry writes")
+    try:
+        t = reg.ensure_type("T")
+        src = reg.ensure_source("S")
+        did = reg.register_snapshot(dt.date(2025, 3, 1), "evt", t, src, STATUS_ID["New"])
+        reg.set_status(did, "Active")
+        reg.register_snapshots([(dt.date(2025, 3, 2), "evt")], t, src)
+        reg.set_status(did, "Inactive")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert reg.active().count() == 1
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

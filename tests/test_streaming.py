@@ -450,6 +450,28 @@ def test_near_dup_batch_replay_is_idempotent(spark, tmp_path):
     assert store.read().count() == n_store_first == 2
 
 
+def test_signature_store_skips_uncommitted_batch_dir(spark, tmp_path):
+    """A batch dir with no committed parquet (only ``_SUCCESS``, as an
+    empty micro-batch's write leaves it) is not a stored batch: the
+    store must not try to read it, and the next batch must run."""
+    from etl_database_spark.streaming.near_dup import SignatureStore, process_batch
+
+    store = SignatureStore(spark, str(tmp_path / "store"))
+    planted = tmp_path / "store" / "batch=3"
+    planted.mkdir(parents=True)
+    (planted / "_SUCCESS").write_text("")
+    assert not store.exists() and store.read() is None
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog today"),
+         (2, "the quick brown fox jumps over the lazy dog tonight")],
+        "doc_id long, text string",
+    )
+    matches = str(tmp_path / "matches")
+    process_batch(docs, store, matches, batch_id=4)
+    assert store.read().count() == 2
+    assert spark.read.parquet(matches).count() >= 1
+
+
 def test_hopping_stream_matches_batch(spark, tmp_path):
     """Hopping (overlapping) windows: the streamed append-mode output
     must equal the batch hopping aggregate for watermark-closed
