@@ -9,45 +9,62 @@ Pipeline per config (mirrors generic_import.py:492-819):
 2. per file: extract (label, date) metadata from the filename
    (metadata.py), register a dataset snapshot (registry.py) —
    superseding any earlier snapshot of the same key;
-3. validate: empty file / "Invalid Event ID" content marks the dataset
-   Empty and archives without loading (generic_import.py:353-377,
-   612-640);
-4. read CSV all-string (the reference lands everything as VARCHAR,
+3. read CSV all-string (the reference lands everything as VARCHAR,
    generic_import.py:183-193) — or Excel via the driver-side converter
-   (sources/excel.py);
+   (sources/excel.py). The header record is parsed on the driver
+   (``csv_header``, Spark's own naming rules) and handed to Spark as an
+   explicit all-string schema, so the read plans without a job; a file
+   with no header (zero bytes) is Empty at once;
+4. validate: an empty file or "Invalid Event ID" content in the first
+   column marks the dataset Empty and archives without loading
+   (generic_import.py:353-377, 612-640). Both gates are observed on
+   the append itself (row count and invalid-row count ride the write
+   job as an ``Observation``); the append writes into a staging
+   directory and commits only if the gates pass;
 5. transform: normalize column names (lowercase, space/hyphen →
    underscore, generic_import.py:392), inject ``datasetid`` +
    metadata columns (generic_import.py:399-403), optionally truncate
-   values to profiled widths (generic_import.py:446-456);
+   values to the width cap (generic_import.py:446-456);
 6. append to the target Parquet table partitioned by ``datasetdate``
    with schema evolution per import strategy
-   (create_importconfig_table.sql:13-17):
+   (create_importconfig_table.sql:13-17); the target's columns come
+   from its Parquet footers on the driver:
    - strategy 1: new columns are added (union-by-name, mergeSchema);
    - strategy 2: only columns already in the target are loaded;
-   - strategy 3: fail if the file is missing target columns;
+   - strategy 3: fail if the file is missing target columns (checked
+     after the Empty gates, so an invalid file still lands Empty);
 7. archive the consumed file (generic_import.py:780-796).
+
+A delivered file costs one Spark job: the staged write.
 
 Scale notes: the per-file loop is config-driven control flow; the data
 path is pure Spark. For bulk backfills use ``load_directory`` which
 reads every matching file in ONE ``spark.read`` (with
 ``input_file_name()``-derived metadata columns) — one job regardless
 of file count. Data tables partition by ``datasetdate`` so snapshot
-queries prune; truncation/profiling are single-pass JVM aggregates.
+queries prune; truncation is a projection on the write and the widths
+it needs are observed on the same job.
 """
 
 from __future__ import annotations
 
+import codecs
 import datetime as dt
 import os
 import re
 import shutil
+from collections import Counter
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from etl_database_spark.maintenance import data_dirs
 from etl_database_spark.metadata import MetadataSpec, parse_date, parse_label
-from etl_database_spark.registry import STATUS_ID, DatasetRegistry
+from etl_database_spark.registry import STATUS_ID, DatasetRegistry, _tmp_path
 
 DEFAULT_WIDTH = 1000  # generic_import.py:328
 WIDTH_CAP = 4000  # generic_import.py:191
@@ -93,31 +110,138 @@ def normalize_columns(df: DataFrame) -> DataFrame:
     return df.toDF(*[normalize_name(c) for c in df.columns])
 
 
-def profile_widths(df: DataFrame, columns: list[str] | None = None) -> dict[str, int]:
+def col(name: str) -> Column:
+    """A column by its literal name: ``F.col`` parses dots and backticks
+    as a nested-field path, which a delivered header may contain."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+# Escapes Spark accepts in the ``sep`` option (CSVExprUtils.toChar).
+_SEP_ESCAPES = {"t": "\t", "r": "\r", "b": "\b", "f": "\f", '"': '"', "'": "'", "\\": "\\"}
+
+
+def _csv_delimiter(sep: str) -> str:
+    """The delimiter Spark reads from a ``sep`` option: any string, with
+    the backslash escapes above spelled out; an empty ``sep``, a lone
+    backslash or another escape is an error, as in Spark."""
+    out, i = [], 0
+    while i < len(sep):
+        if sep[i] != "\\":
+            out.append(sep[i])
+            i += 1
+            continue
+        esc = sep[i + 1:i + 2]
+        if esc not in _SEP_ESCAPES:
+            raise ValueError(f"unsupported CSV delimiter {sep!r}")
+        out.append(_SEP_ESCAPES[esc])
+        i += 2
+    if not out:
+        raise ValueError("empty CSV delimiter")
+    return "".join(out)
+
+
+def _first_line(path: str) -> str | None:
+    """The line Spark's CSV header inference takes: the first one that
+    is not empty or all spaces, after a UTF-8 BOM; LF, CR and CRLF
+    all end a line. Reads only as far as that line."""
+    with open(path, "rb") as f:
+        head = f.read(len(codecs.BOM_UTF8))
+        pending = b"" if head == codecs.BOM_UTF8 else head
+        while True:
+            chunk = f.read(1 << 16)
+            *lines, pending = re.split(rb"\r\n|\r|\n", pending + chunk)
+            if not chunk:
+                lines.append(pending)
+            for line in lines:
+                text = line.decode("utf-8", "replace")
+                if text.strip(" "):
+                    return text
+            if not chunk:
+                return None
+
+
+def _split_record(line: str, sep: str) -> list[str | None]:
+    """Split one CSV line as Spark's parser does with its defaults
+    (quote ``"``, escape ``\\``): a quoted field may hold the
+    delimiter and escaped quotes or backslashes, whitespace after its
+    closing quote is dropped, an unterminated one runs to the end of
+    the line, and one with a stray quote inside keeps its raw text up
+    to the next delimiter. An empty unquoted field is None."""
+    out: list[str | None] = []
+    i, n = 0, len(line)
+    while True:
+        if line.startswith('"', i):
+            buf, j = [], i + 1
+            while j < n and line[j] != '"':
+                if line[j] == "\\" and line[j + 1:j + 2] in ('"', "\\"):
+                    j += 1
+                buf.append(line[j])
+                j += 1
+            if j == n:
+                out.append("".join(buf))
+                return out
+            k = j + 1
+            while k < n and line[k] <= " " and not line.startswith(sep, k):
+                k += 1
+            if k == n:
+                out.append("".join(buf))
+                return out
+            if line.startswith(sep, k):
+                out.append("".join(buf))
+                i = k + len(sep)
+                continue
+            end = line.find(sep, j + 1)
+        else:
+            end = line.find(sep, i)
+        if end < 0:
+            out.append(line[i:] or None)
+            return out
+        out.append(line[i:end] or None)
+        i = end + len(sep)
+
+
+def csv_header(path: str, sep: str = ",", case_sensitive: bool = False) -> list[str] | None:
+    """Column names Spark gives a CSV read with ``header=true``, worked
+    out on the driver without a Spark job; None for a file with no
+    header line. Spark's naming (CSVUtils.makeSafeHeader): an empty
+    name becomes ``_c{i}``; a duplicate name (case-insensitively unless
+    ``case_sensitive``) gets its index appended; whitespace is kept."""
+    line = _first_line(path)
+    if line is None:
+        return None
+    row = _split_record(line, _csv_delimiter(sep))
+    key = (lambda v: v) if case_sensitive else str.lower
+    seen = Counter(key(v) for v in row if v is not None)
+    return [
+        f"_c{i}" if not v else f"{v}{i}" if seen[key(v)] > 1 else v
+        for i, v in enumerate(row)
+    ]
+
+
+def width_rule(max_len: int | None) -> int:
     """Per-column VARCHAR-width rule: max_len × 1.5, floor DEFAULT,
-    cap 4000 (generic_import.py:183-193) — one aggregate pass over the
+    cap 4000 (generic_import.py:183-193)."""
+    return min(int((max_len or 0) * WIDTH_FACTOR) or DEFAULT_WIDTH, WIDTH_CAP)
+
+
+def profile_widths(df: DataFrame, columns: list[str] | None = None) -> dict[str, int]:
+    """``width_rule`` per string column — one aggregate pass over the
     scan, not per-column passes."""
     cols = columns or [c for c, t in df.dtypes if t == "string"]
     if not cols:
         return {}
-    row = df.agg(
-        *[F.max(F.length(F.col(c))).alias(c) for c in cols]
-    ).first()
-    out = {}
-    for c in cols:
-        max_len = row[c] or 0
-        out[c] = min(int(max_len * WIDTH_FACTOR) or DEFAULT_WIDTH, WIDTH_CAP)
-    return out
+    row = df.agg(*[F.max(F.length(col(c))).alias(f"w{i}") for i, c in enumerate(cols)]).first()
+    return {c: width_rule(row[f"w{i}"]) for i, c in enumerate(cols)}
 
 
 def truncate_to_widths(df: DataFrame, widths: dict[str, int]) -> DataFrame:
     """Explicit substring truncation stage (generic_import.py:446-456);
     the reference warns per truncated column — we return the frame and
     let the caller count truncations if it cares."""
-    for c, w in widths.items():
-        if c in df.columns:
-            df = df.withColumn(c, F.substring(F.col(c), 1, w))
-    return df
+    return df.select(*[
+        F.substring(col(c), 1, widths[c]).alias(c) if c in widths else col(c)
+        for c in df.columns
+    ])
 
 
 class TargetTable:
@@ -142,23 +266,56 @@ class TargetTable:
         return self.spark.read.option("mergeSchema", "true").parquet(self.path)
 
     def columns(self) -> list[str]:
-        return self.read().columns if self.exists() else []
+        """The union of the column names in the table's Parquet footers,
+        then its hive partition columns, read on the driver (a Spark
+        ``mergeSchema`` read would start a job to learn them)."""
+        names: dict[str, None] = {}
+        partition_cols: dict[str, None] = {}
+        for pdir, files in data_dirs(self.path):
+            for f in files:
+                names.update(dict.fromkeys(pq.read_schema(f).names))
+            rel = os.path.relpath(pdir, self.path)
+            partition_cols.update(dict.fromkeys(
+                seg.split("=", 1)[0] for seg in rel.split(os.sep) if "=" in seg
+            ))
+        return list(names) + [c for c in partition_cols if c not in names]
 
-    def append(self, df: DataFrame, strategy: int = 1) -> list[str]:
+    def append(self, df: DataFrame, strategy: int = 1,
+               gate: Callable[[], bool] | None = None) -> list[str] | None:
         """Append with per-strategy schema reconciliation
         (create_importconfig_table.sql:13-17; generic_import.py:320-351,
-        405-424). Returns the list of new columns added (strategy 1).
+        405-424). Returns the list of new columns added (strategy 1),
+        or None when ``gate`` refused the write.
+
+        The frame is written into a staging directory beside the table
+        and committed only once ``gate`` (called after the write, so it
+        can read metrics observed on it) passes: a new table is the
+        renamed staging directory, an existing one takes each staged
+        ``datasetdate=…`` file. A strategy-3 violation is raised after
+        the gate, so the caller's Empty gates take precedence over it,
+        as in the reference. On any failure the staging directory is
+        removed and the table is left as it was.
 
         Matching is case-insensitive on normalized names (the reference
         lowercases both sides, generic_import.py:405-414).
         """
         new_cols: list[str] = []
+        missing_in_file: list[str] = []
         created = not self.exists()
         if not created:
             existing = self.columns()
             incoming = df.columns
             missing_in_file = [c for c in existing if c not in incoming and c != "datasetdate"]
             extra_in_file = [c for c in incoming if c not in existing]
+            if strategy == 2 and extra_in_file:
+                df = df.drop(*extra_in_file)
+            elif strategy in (1, 3):
+                new_cols = extra_in_file
+        staged = _tmp_path(self.path)
+        try:
+            df.write.partitionBy("datasetdate").parquet(staged)
+            if gate is not None and not gate():
+                return None
             if strategy == 3 and missing_in_file:
                 if self.audit is not None:
                     from etl_database_spark.audit import VALIDATION_FAILED
@@ -171,15 +328,17 @@ class TargetTable:
                 raise ValueError(
                     f"strategy 3: source file missing target columns {missing_in_file}"
                 )
-            if strategy == 2 and extra_in_file:
-                df = df.drop(*extra_in_file)
-            elif strategy in (1, 3):
-                new_cols = extra_in_file
-        (
-            df.write.mode("append")
-            .partitionBy("datasetdate")
-            .parquet(self.path)
-        )
+            if created:
+                os.rename(staged, self.path)
+            else:
+                for part in os.listdir(staged):
+                    src, dst = os.path.join(staged, part), os.path.join(self.path, part)
+                    if os.path.isdir(src):
+                        os.makedirs(dst, exist_ok=True)
+                        for f in os.listdir(src):
+                            os.rename(os.path.join(src, f), os.path.join(dst, f))
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
         if self.audit is not None:
             from etl_database_spark.audit import ADD_COLUMN, CREATE_TABLE
 
@@ -249,12 +408,14 @@ class ImportJob:
             os.path.join(src, f) for f in os.listdir(src) if pat.match(f)
         )
 
-    def _read_file(self, path: str) -> tuple[DataFrame, str | None]:
-        """→ (frame, scratch_dir): ``scratch_dir`` is the Excel
-        conversion tempdir to delete once the frame has been fully
-        consumed (the read is lazy, so it cannot be removed here)."""
+    def _read_file(self, path: str) -> DataFrame | None:
+        """The file as an all-string frame (reference semantics), or
+        None when it has no header line. The header is parsed on the
+        driver, so Spark gets an explicit schema and starts no job to
+        infer one. An Excel file is converted into
+        ``self._scratch_dir``, which ``run_file`` deletes once the lazy
+        frame has been consumed."""
         cfg = self.config
-        scratch = None
         if cfg.file_type.upper() in ("XLS", "XLSX"):
             import tempfile
 
@@ -262,18 +423,22 @@ class ImportJob:
 
             # Convert into a temp dir — the converted CSV must not land
             # in the watch dir (it is a derived artifact, not an input).
-            scratch = tempfile.mkdtemp(prefix="xls2csv_")
+            self._scratch_dir = tempfile.mkdtemp(prefix="xls2csv_")
             out = os.path.join(
-                scratch, os.path.splitext(os.path.basename(path))[0] + ".csv"
+                self._scratch_dir, os.path.splitext(os.path.basename(path))[0] + ".csv"
             )
             path = excel_to_csv(path, out)
-        df = (
-            self.spark.read.option("header", "true")
+        names = csv_header(path, cfg.delimiter,
+                           self.spark.conf.get("spark.sql.caseSensitive") == "true")
+        if names is None:
+            return None
+        schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+        return (
+            self.spark.read.schema(schema)
+            .option("header", "true")
             .option("sep", cfg.delimiter)
-            .option("inferSchema", "false")  # all-string, reference semantics
             .csv(path)
         )
-        return df, scratch
 
     def _archive(self, path: str) -> None:
         os.makedirs(self.config.archive_directory, exist_ok=True)
@@ -285,10 +450,11 @@ class ImportJob:
         # lands, and parquet discovery should never see this file.
         return self.table.path + "._widths.json"
 
-    def _target_widths(self, df: DataFrame) -> dict[str, int]:
-        """Profiled VARCHAR widths for truncation — the Parquet-world
-        analog of the reference's DDL column lengths, persisted in a
-        sidecar JSON and only ever WIDENED.
+    def _target_widths(self, max_lens: dict[str, int | None]) -> dict[str, int]:
+        """Profiled VARCHAR widths — the Parquet-world analog of the
+        reference's DDL column lengths, persisted in a sidecar JSON and
+        only ever WIDENED. ``max_lens`` is the incoming file's longest
+        value per column, observed on the append's write job.
 
         This mirrors generic_import.py exactly: each import profiles
         its OWN incoming frame (get_column_lengths, :183-193), widens
@@ -296,16 +462,18 @@ class ImportJob:
         ALTER COLUMN branch, :317-347), then truncates against the
         post-widening widths (:440-456) — so, as in the reference,
         truncation fires only at the 4000 hard cap and the widths are
-        the durable schema record. Re-deriving them from the target's
-        DATA each run (the previous behavior) had two scale problems:
-        a whole-table aggregate scan per imported file, and a
-        ratchet-down — an early narrow snapshot could silently
-        truncate wider later deliveries. The one legacy case — a
-        pre-existing table with no sidecar — profiles the target once
-        to seed it.
+        the durable schema record. That is why the write itself can
+        truncate to ``WIDTH_CAP`` before the widths are known: a
+        merged width is at least ``width_rule(max_len)``, which is at
+        least ``max_len`` below the cap. Re-deriving the widths from
+        the target's DATA each run would cost a whole-table scan per
+        file and ratchet down — an early narrow snapshot would
+        silently truncate wider later deliveries. The one legacy case
+        — a pre-existing table with no sidecar — profiles the target
+        once to seed it.
 
         Returns the merged widths; the caller persists them via
-        ``_persist_widths`` only AFTER the append succeeds, so a
+        ``_persist_widths`` only AFTER the append commits, so a
         failed delivery leaves no schema trace (the reference gets
         the same effect from PostgreSQL's transactional DDL: its
         ALTERs roll back with the failed INSERT)."""
@@ -319,8 +487,7 @@ class ImportJob:
             persisted = profile_widths(self.table.read())  # one-time seed
         else:
             persisted = {}
-        incoming = profile_widths(df)
-        merged = {c: max(persisted.get(c, 0), w) for c, w in incoming.items()}
+        merged = {c: max(persisted.get(c, 0), width_rule(n)) for c, n in max_lens.items()}
         return persisted | merged
 
     def _persist_widths(self, widths: dict[str, int]) -> None:
@@ -345,6 +512,48 @@ class ImportJob:
                 shutil.rmtree(scratch, ignore_errors=True)
                 self._scratch_dir = None
 
+    def _load(self, df: DataFrame, dataset_id: int,
+              snap_date: dt.date) -> tuple[int, list[str]] | None:
+        """Transform and append one file's frame → (rows, new columns),
+        or None when it is Empty: no rows, or a first-column value
+        holding 'Invalid Event ID' (generic_import.py:353-362). Both
+        gates, and the value lengths for the width sidecar, are
+        observed on the append's write job, which commits only if the
+        gates pass — the file is read once."""
+        cfg = self.config
+        names = [normalize_name(c) for c in df.columns]
+        metrics = [
+            F.count(F.lit(1)).alias("rows"),
+            F.count_if(F.lower(col(df.columns[0])).contains("invalid event id")).alias("invalid"),
+        ]
+        if cfg.truncate_to_width:
+            metrics += [F.max(F.length(col(c))).alias(f"len{i}") for i, c in enumerate(df.columns)]
+        obs = Observation()
+        df = df.observe(obs, *metrics).toDF(*names)
+        if cfg.truncate_to_width:
+            df = truncate_to_widths(df, dict.fromkeys(names, WIDTH_CAP))
+        df = (
+            df.withColumn("datasetid", F.lit(dataset_id).cast("long"))
+            .withColumn("datasetdate", F.lit(snap_date).cast("date"))
+        )
+        widths = None
+
+        def gates_pass() -> bool:
+            nonlocal widths
+            m = obs.get
+            if m["rows"] == 0 or m["invalid"] > 0:
+                return False
+            if cfg.truncate_to_width:
+                widths = self._target_widths({c: m[f"len{i}"] for i, c in enumerate(names)})
+            return True
+
+        new_cols = self.table.append(df, cfg.import_strategy, gate=gates_pass)
+        if new_cols is None:
+            return None
+        if widths is not None:
+            self._persist_widths(widths)  # only after the append lands
+        return obs.get["rows"], new_cols
+
     def _run_file(self, path: str) -> ImportResult:
         self._scratch_dir = None
         cfg = self.config
@@ -356,7 +565,7 @@ class ImportJob:
             snap_date, label, type_id, source_id, STATUS_ID["New"]
         )
         # ANY exception between registration and a terminal status —
-        # append failures, but also width profiling, normalization, or
+        # append failures, but also width merging, normalization, or
         # observation retrieval — must mark the row Failed: a row left
         # in 'New' with the file un-archived would be re-registered as
         # a fresh 'New' row by every subsequent sweep (unbounded
@@ -366,51 +575,16 @@ class ImportJob:
         terminal = False
         try:
             try:
-                df, self._scratch_dir = self._read_file(path)
+                df = self._read_file(path)
             except Exception:  # unreadable file → Empty, archive (generic_import.py:612-640)
+                df = None
+            loaded = None if df is None else self._load(df, dataset_id, snap_date)
+            if loaded is None:
                 self.registry.set_status(dataset_id, "Empty")
                 terminal = True
                 self._archive(path)
                 return ImportResult(path, dataset_id, 0, "Empty")
-
-            empty = not df.columns or df.isEmpty()
-            if not empty:
-                # Content gate: first column contains 'Invalid Event ID'
-                # (generic_import.py:353-362).
-                first_col = df.columns[0]
-                empty = (
-                    df.where(
-                        F.lower(F.col(first_col).cast("string")).contains("invalid event id")
-                    )
-                    .limit(1)
-                    .count()
-                    > 0
-                )
-            if empty:
-                self.registry.set_status(dataset_id, "Empty")
-                terminal = True
-                self._archive(path)
-                return ImportResult(path, dataset_id, 0, "Empty")
-
-            df = normalize_columns(df)
-            widths = None
-            if cfg.truncate_to_width:
-                widths = self._target_widths(df)
-                df = truncate_to_widths(df, widths)
-            df = (
-                df.withColumn("datasetid", F.lit(dataset_id).cast("long"))
-                .withColumn("datasetdate", F.lit(snap_date).cast("date"))
-            )
-            # Row count is observed DURING the append job (metric
-            # piggy-backs on the write) — a post-hoc df.count() would
-            # re-execute the full read (and for Excel, the driver-side
-            # conversion) once more.
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            new_cols = self.table.append(df, cfg.import_strategy)
-            rows = obs.get["rows"]
-            if widths is not None:
-                self._persist_widths(widths)  # only after the append lands
+            rows, new_cols = loaded
             self.registry.set_status(dataset_id, "Active")
             terminal = True
             self._archive(path)

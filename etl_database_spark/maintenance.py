@@ -3,8 +3,9 @@
 Re-expresses the reference's ops procedures on Parquet tables:
 
 - ``compact_table`` ≙ VACUUM ANALYZE loop (maintenance_procedures.sql:
-  56-116): rewrite a table directory at a target file count — small-file
-  compaction is the Parquet analog of vacuuming;
+  56-116): rewrite each partition directory that holds too many files
+  at a target file count — small-file compaction is the Parquet analog
+  of vacuuming;
 - ``table_stats_snapshot`` ≙ pcapturetableindexstats
   (table_index_monitoring.sql:61-149): per-table row/byte/file counts
   appended to a stats table with a capture timestamp;
@@ -17,40 +18,75 @@ Re-expresses the reference's ops procedures on Parquet tables:
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
+import shutil
+from collections.abc import Iterator
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from etl_database_spark.registry import _atomic_overwrite
+from etl_database_spark.registry import _swap_in, _tmp_path
+
+# Footer key under which Spark stores the schema it wrote.
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _layout_partition_cols(path: str) -> list[str]:
-    """Partition columns from the hive-style directory layout
-    (``col=value`` path segments), walked from the table root. The
-    layout is the source of truth — inferring from a hardcoded column
-    name would silently flatten any table partitioned by something
-    else, destroying partition pruning on the rewrite."""
-    cols: list[str] = []
-    cur = path
-    while True:
-        subdirs = [
-            d for d in (os.listdir(cur) if os.path.isdir(cur) else [])
-            if "=" in d and os.path.isdir(os.path.join(cur, d))
-        ]
-        if not subdirs:
-            return cols
-        cols.append(subdirs[0].split("=", 1)[0])
-        cur = os.path.join(cur, subdirs[0])
+def data_dirs(path: str) -> Iterator[tuple[str, list[str]]]:
+    """(directory, data files) for every directory under the table
+    ``path`` that holds data files directly: the table itself when it
+    is unpartitioned, else each hive partition directory. Data files
+    are the ones Spark reads — names not starting with ``_`` or ``.``
+    (which skips ``_SUCCESS`` and the ``.crc`` checksums)."""
+    for dirpath, dirnames, files in os.walk(path):
+        dirnames[:] = sorted(d for d in dirnames if not d.startswith(("_", ".")))
+        data = sorted(os.path.join(dirpath, f) for f in files if not f.startswith(("_", ".")))
+        if data:
+            yield dirpath, data
+
+
+def footer_schema(files: list[str]) -> T.StructType:
+    """The union by name of the files' schemas, read from their Parquet
+    footers on the driver (Spark's own schema record when it wrote the
+    file, else the Arrow schema) — what a ``mergeSchema`` read finds,
+    without its Spark job."""
+    fields: dict[str, T.StructField] = {}
+    for f in files:
+        schema = pq.read_schema(f)
+        spark_json = (schema.metadata or {}).get(SPARK_SCHEMA_KEY)
+        struct = (T.StructType.fromJson(json.loads(spark_json)) if spark_json
+                  else from_arrow_schema(schema))
+        for fld in struct.fields:
+            fields.setdefault(fld.name, fld)
+    return T.StructType(list(fields.values()))
 
 
 def compact_table(spark: SparkSession, path: str, target_files: int = 8) -> int:
-    """Rewrite a Parquet table into ``target_files`` files per
-    partition directory; returns file count before compaction."""
+    """Rewrite each partition directory of a Parquet table that holds
+    more than ``target_files`` data files into at most that many (an
+    unpartitioned table is one partition); returns the table's file
+    count before compaction. Each partition keeps its own schema —
+    readers union by name — and is written beside the table, then
+    swapped in, so a partition is never half-written. Partitions at or
+    under the target are not touched, so the cost of a compaction
+    follows what was appended since the last one, not the table size."""
     before = sum(len(files) for _, _, files in os.walk(path))
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    partition_cols = [c for c in _layout_partition_cols(path) if c in df.columns]
-    # the rewrite keeps the partitioning layout
-    _atomic_overwrite(df.repartition(target_files), path, partition_cols)
+    staging = _tmp_path(path)
+    try:
+        for pdir, files in list(data_dirs(path)):
+            if len(files) <= target_files:
+                continue
+            tmp = os.path.normpath(os.path.join(staging, os.path.relpath(pdir, path)))
+            (
+                spark.read.schema(footer_schema(files)).parquet(pdir)
+                .coalesce(target_files)
+                .write.parquet(tmp)
+            )
+            _swap_in(tmp, pdir)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
     return before
 
 

@@ -336,14 +336,10 @@ def _write_arrow(table: pa.Table, path: str) -> None:
     _swap_in(tmp, path)
 
 
-def _atomic_overwrite(df: DataFrame, path: str, partition_cols: list[str] | None = None) -> None:
-    """Spark-write ``df`` to a temp dir, then swap it in for ``path``
-    (optionally hive-partitioned by ``partition_cols``)."""
+def _atomic_overwrite(df: DataFrame, path: str) -> None:
+    """Spark-write ``df`` to a temp dir, then swap it in for ``path``."""
     tmp = _tmp_path(path)
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
+    df.write.mode("overwrite").parquet(tmp)
     _swap_in(tmp, path)
 
 

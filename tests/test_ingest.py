@@ -335,3 +335,155 @@ def test_load_directory_snapshot_key_bound(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(ing, "MAX_SNAPSHOT_KEYS", 0)
     with pytest.raises(ValueError, match="distinct .* snapshot keys"):
         load_directory(spark, cfg, reg, str(tmp_path / "data"))
+
+
+HEADER_CASES = {
+    "bom": (b"\xef\xbb\xbfA,B\n1,2\n", ","),
+    "empty_name": (b"A,,C,\n1,2,3,4\n", ","),
+    "quoted_empty_name": (b'A,"",C\n1,2,3\n', ","),
+    "case_dups": (b"a,A,b,a\n1,2,3,4\n", ","),
+    "quoted_sep": (b'"x,y",z\n1,2\n', ","),
+    "quotes": (b'"a\\"b",c" d,"e"" f",g,"h" ,"unterminated\n1,2,3,4,5,6\n', ","),
+    "backslashes": (b'"a\\\\b","c\\\\",d,"e\\\\\\"f",g\\\\h,"i\\\\\n1,2\n', ","),
+    "spaces": (b" Name , Other\n1,2\n", ","),
+    "crlf": (b"\r\n  \r\nA,B\r\n1,2\r\n", ","),
+    "tab": (b"A\tB\n1\t2\n", "\t"),
+    "tab_escape": (b"A\tB\n1\t2\n", "\\t"),
+    "multi_char_sep": (b'A||"B||C"||D|\n1||2||3\n', "||"),
+    "header_only": (b"Event.ID,Na`me\n", ","),
+    "zero_byte": (b"", ","),
+}
+
+
+@pytest.mark.parametrize("case", sorted(HEADER_CASES))
+def test_csv_header_matches_spark(spark, tmp_path, case):
+    """The driver-side header reproduces the names Spark's own header
+    inference gives, for every shape of header Spark handles."""
+    from etl_database_spark.ingest import csv_header
+
+    body, sep = HEADER_CASES[case]
+    p = tmp_path / f"{case}.csv"
+    p.write_bytes(body)
+    want = spark.read.option("header", True).option("sep", sep).csv(str(p)).columns
+    got = csv_header(str(p), sep)
+    assert (got or []) == want
+    assert (got is None) == (body == b"")
+
+
+def test_dotted_and_backtick_headers_load(spark, tmp_path):
+    """Header names that Spark would parse as a nested-field path (a
+    dot) or a quoted identifier (a backtick) load like any other."""
+    cfg = _config(tmp_path, truncate_to_width=True)
+    reg = DatasetRegistry(spark, str(tmp_path / "registry"))
+    job = ImportJob(spark, cfg, reg, str(tmp_path / "data"))
+    (tmp_path / "watch" / "20250301T120000_MeetMax_1.csv").write_text("Event.ID,Name\n1,a\n")
+    (tmp_path / "watch" / "20250302T120000_MeetMax_1.csv").write_text("Ev`ent,Name\n2,b\n")
+    results = job.run()
+    assert [r.status for r in results] == ["Active", "Active"]
+    rows = job.table.read().select("`event.id`", "`ev``ent`", "name").orderBy("name").collect()
+    assert [tuple(r) for r in rows] == [("1", None, "a"), (None, "2", "b")]
+
+
+def test_strategy3_invalid_file_lands_empty(spark, tmp_path):
+    """The Empty gates come before the strategy-3 check, as in the
+    reference: an 'Invalid Event ID' file that also lacks the target's
+    columns is Empty, not Failed, and leaves no audit record."""
+    from etl_database_spark.audit import VALIDATION_FAILED, DdlAuditLog
+
+    audit = DdlAuditLog(spark, str(tmp_path / "audit"))
+    cfg = _config(tmp_path, import_strategy=3)
+    reg = DatasetRegistry(spark, str(tmp_path / "registry"))
+    job = ImportJob(spark, cfg, reg, str(tmp_path / "data"), audit=audit)
+    (tmp_path / "watch" / "20250301T120000_MeetMax_1.csv").write_text("A,B\n1,2\n")
+    (first,) = job.run()
+    assert first.status == "Active"
+    (tmp_path / "watch" / "20250302T120000_MeetMax_2.csv").write_text(
+        "Message\nInvalid Event ID\n"
+    )
+    (res,) = job.run()
+    assert res.status == "Empty"
+    assert os.path.exists(tmp_path / "archive" / "20250302T120000_MeetMax_2.csv")
+    assert VALIDATION_FAILED not in {r.eventtype for r in audit.events().collect()}
+    assert job.table.read().count() == 1
+
+
+def test_empty_result_leaves_no_staging(spark, tmp_path):
+    """A gated-out append removes its staging directory, for a new
+    table and for an existing one."""
+    cfg = _config(tmp_path)
+    reg = DatasetRegistry(spark, str(tmp_path / "registry"))
+    job = ImportJob(spark, cfg, reg, str(tmp_path / "data"))
+    watch = tmp_path / "watch"
+    (watch / "20250301T120000_MeetMax_1.csv").write_text("A,B\n")
+    (watch / "20250302T120000_MeetMax_1.csv").write_text("A,B\n1,2\n")
+    (watch / "20250303T120000_MeetMax_1.csv").write_text("A,B\ninvalid event id,2\n")
+    assert [r.status for r in job.run()] == ["Empty", "Active", "Empty"]
+    assert sorted(os.listdir(tmp_path / "data")) == ["tmeetmaxevent"]
+    assert job.table.read().count() == 1
+
+
+def _jobs_of(spark, fn):
+    """(result, Spark job ids started by fn) under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ingest-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "ingest")
+    try:
+        out = fn()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_run_file_starts_one_spark_job(spark, tmp_path):
+    """A delivered file costs one Spark job, the write: the header is
+    read on the driver, the gates ride the write, the target's columns
+    come from its footers. An Empty file costs at most that job."""
+    cfg = _config(tmp_path)
+    reg = DatasetRegistry(spark, str(tmp_path / "registry"))
+    job = ImportJob(spark, cfg, reg, str(tmp_path / "data"))
+    watch = tmp_path / "watch"
+    files = {
+        "20250301T120000_MeetMax_1.csv": ("A,B\n1,2\n3,4\n", "Active", 1),  # new table
+        "20250302T120000_MeetMax_1.csv": ("A,B,C\n5,6,7\n", "Active", 1),  # existing, evolves
+        "20250303T120000_MeetMax_1.csv": ("A\nInvalid Event ID\n", "Empty", 1),
+        "20250304T120000_MeetMax_1.csv": ("A,B\n", "Empty", 1),
+        "20250305T120000_MeetMax_1.csv": ("", "Empty", 0),
+    }
+    for name, (body, status, max_jobs) in files.items():
+        (watch / name).write_text(body)
+        res, jobs = _jobs_of(spark, lambda: job.run_file(str(watch / name)))
+        assert res.status == status, name
+        if status == "Active":
+            assert len(jobs) == 1, name
+        else:
+            assert len(jobs) <= max_jobs, name
+    assert job.table.read().count() == 3
+
+
+def test_compaction_rewrites_only_crowded_partitions(spark, tmp_path):
+    """Compaction rewrites the partitions over the target file count,
+    each with its own schema, and leaves the others' files alone."""
+    from etl_database_spark.maintenance import compact_table
+
+    tbl = str(tmp_path / "t")
+    one = spark.createDataFrame([("a", "2025-03-01")], "x string, datasetdate string")
+    one.write.partitionBy("datasetdate").parquet(tbl)
+    crowded = spark.createDataFrame(
+        [(str(i), f"y{i}", "2025-03-02") for i in range(6)], "x string, y string, datasetdate string"
+    )
+    crowded.repartition(3).write.mode("append").partitionBy("datasetdate").parquet(tbl)
+    quiet = os.path.join(tbl, "datasetdate=2025-03-01")
+    before = {f: os.stat(os.path.join(quiet, f)).st_mtime_ns for f in os.listdir(quiet)}
+
+    compact_table(spark, tbl, target_files=1)
+
+    assert {f: os.stat(os.path.join(quiet, f)).st_mtime_ns for f in os.listdir(quiet)} == before
+    busy = os.path.join(tbl, "datasetdate=2025-03-02")
+    assert len([f for f in os.listdir(busy) if f.endswith(".parquet")]) == 1
+    out = spark.read.option("mergeSchema", "true").parquet(tbl)
+    assert sorted(tuple(r) for r in out.select("x", "y").collect()) == sorted(
+        [("a", None)] + [(str(i), f"y{i}") for i in range(6)]
+    )
+    assert not [d for d in os.listdir(tmp_path) if ".tmp." in d or ".old." in d]
