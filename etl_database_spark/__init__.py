@@ -17,9 +17,8 @@ in SURVEY.md) as an idiomatic Apache Spark engine:
   as-of previous-business-day lookups (reference
   onboarding/sql/dataset_setup.sql:430-513) as pure DataFrame ops.
 - **Scale extensions**: deduplication (exact, MinHash-LSH, SimHash,
-  n-gram Jaccard), embedding similarity search, text analysis and
-  multimodal-column plumbing, designed partition-parallel for very
-  large (100 TB-class) inputs.
+  n-gram Jaccard), embedding similarity search and text analysis,
+  designed partition-parallel for very large (100 TB-class) inputs.
 
 Storage is Parquet partitioned by snapshot date; the catalog is the
 Spark session catalog (temp views); configuration is plain DataFrames

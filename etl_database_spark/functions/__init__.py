@@ -1,5 +1,6 @@
 """Column-expression libraries: text analysis, dedup, similarity,
-multimodal plumbing. Everything here returns Column expressions or
-DataFrame transforms built from pyspark.sql.functions (JVM-side,
+sketches. Everything here returns Column expressions or DataFrame
+transforms built from pyspark.sql.functions (JVM-side,
 codegen-friendly); Python/Pandas UDFs appear only where built-ins
-genuinely cannot express the semantics (multimodal decode stubs)."""
+genuinely cannot express the semantics (zlib compression ratios in
+text.py)."""

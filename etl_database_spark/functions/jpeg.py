@@ -10,10 +10,10 @@ hierarchical mode, and 12-bit precision return ``None`` so the
 caller's real-codec slot stays explicit; corrupt streams raise rather
 than yield wrong pixels.
 
-Used by the multimodal layer's metadata-first pipeline
-(functions/multimodal.py): only rows selected for decoding reach this
-code, Arrow-batched through mapInPandas, so Python-speed Huffman
-walking is acceptable; swap in an imaging library for bulk pixel work.
+A standalone decoder: no ingest path or registered query calls it. A
+caller should hand it only the rows selected for decoding,
+Arrow-batched through mapInPandas, so Python-speed Huffman walking
+stays acceptable; swap in an imaging library for bulk pixel work.
 Extension scope — the reference repo has no image path at all.
 """
 

@@ -235,10 +235,10 @@ def compression_ratios(
     rows-only and the correctness gate is pytest against direct
     ``zlib.compress``).
 
-    This is the documented Pandas slow path (like the multimodal
-    decoders): compression is genuinely inexpressible as a column
-    expression. Arrow streams batches; Python touches each payload
-    once; cost is one scan, no shuffle."""
+    This is the functions layer's one Pandas slow path: compression
+    is genuinely inexpressible as a column expression. Arrow streams
+    batches; Python touches each payload once; cost is one scan, no
+    shuffle."""
     import pandas as pd
     from pyspark.sql import types as T
 

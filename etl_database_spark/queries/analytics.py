@@ -602,8 +602,7 @@ def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
         path = tempfile.mkdtemp(prefix="spark_graft_part_events_")
         ev = table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
         # one shuffle keyed by day → one file per day directory; at
-        # scale this is the ingest-time write (operators/layout.py
-        # handles multi-column clustering within partitions)
+        # scale this is the ingest-time write
         ev.repartition("day").write.mode("overwrite").partitionBy("day").parquet(path)
         atexit.register(shutil.rmtree, path, ignore_errors=True)
         _PART_EVENTS_CACHE[key] = path

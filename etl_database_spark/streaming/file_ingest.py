@@ -71,12 +71,13 @@ def run_once(
     counts = {"rows": 0}
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # the key collect doubles as the emptiness check: no keys, no rows
         keys = [
             (r["label"], r["datasetdate"])
             for r in batch_df.select("label", "datasetdate").distinct().collect()
         ]
+        if not keys:
+            return
         type_id = registry.ensure_type(config.datasettype)
         source_id = registry.ensure_source(config.datasource)
         # one registry rewrite for all of the batch's keys

@@ -1,11 +1,10 @@
 """Streaming near-duplicate detection against a persisted signature
 store.
 
-The exact streaming dedup (streaming/dedup.py) suppresses byte-equal
-re-arrivals with watermark-bounded state. Near-dup detection cannot be
-watermark-bounded — a paraphrase of a document ingested last month is
-still a near-dup — so the state here is a *persisted MinHash signature
-store* (Parquet), not stream-engine state:
+Near-dup detection cannot use watermark-bounded stream state — a
+paraphrase of a document ingested last month is still a near-dup — so
+the state here is a *persisted MinHash signature store* (Parquet), not
+stream-engine state:
 
 - each micro-batch shingles + signs ONLY its new documents (cost ∝
   batch, never ∝ corpus);

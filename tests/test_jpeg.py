@@ -297,22 +297,6 @@ def test_truncated_jpeg_fails_loudly():
         decode_jpeg(payload[: len(payload) - len(payload) // 3])
 
 
-def test_multimodal_pipeline_decodes_jpeg(spark):
-    """JPEG payloads flow through image_features like BMP twins; the
-    two containers of the same smooth image produce close features."""
-    from etl_database_spark.functions import multimodal as M
-    from tests.test_multimodal import _bmp_bytes
-
-    img = _smooth_image(24, 32)
-    px_list = [[tuple(img[r, c]) for c in range(32)] for r in range(24)]
-    rows = [(1, _bmp_bytes(px_list)), (2, _encode_jpeg(img, quality=95))]
-    df = spark.createDataFrame(rows, "id long, media binary")
-    out = {r.id: r for r in M.image_features(df, fake=False).collect()}
-    assert (out[2].width, out[2].height) == (32, 24)
-    for f_bmp, f_jpg in zip(out[1].features, out[2].features):
-        assert abs(f_bmp - f_jpg) < 0.02
-
-
 # ---------------------------------------------------------------------------
 # Progressive (SOF2) encoder: spectral selection + successive
 # approximation with EOB-run coding, following T.81 G.1.2 (the same

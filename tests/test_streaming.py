@@ -45,6 +45,31 @@ def test_streaming_ingest_exactly_once(spark, tmp_path):
     assert [d.datasetdate for d in ds] == [dt.date(2025, 3, 1), dt.date(2025, 3, 2)]
 
 
+def test_streaming_ingest_header_only_file_is_a_no_op(spark, tmp_path):
+    """A micro-batch with no rows (a header-only CSV) registers nothing
+    and writes nothing: no dataset snapshot, no target table dir."""
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    cfg = ImportConfig(
+        config_name="StreamImport",
+        source_directory=str(watch),
+        archive_directory=str(tmp_path / "arch"),
+        file_pattern=r".*\.csv",
+        target_table="tstream",
+        metadata=MetadataSpec(label_location="2", date_location="0"),
+    )
+    schema = T.StructType(
+        [T.StructField("company", T.StringType()), T.StructField("ticker", T.StringType())]
+    )
+    reg = DatasetRegistry(spark, str(tmp_path / "registry"))
+    (watch / "20250301T120000_MeetMax_5.csv").write_text("company,ticker\n")
+
+    n = run_once(spark, cfg, schema, reg, str(tmp_path / "data"), str(tmp_path / "ckpt"))
+    assert n == 0
+    assert reg.datasets().count() == 0
+    assert not (tmp_path / "data" / "tstream").exists()
+
+
 def test_windowed_stream_matches_batch(spark, tmp_path):
     """Stream (watermarked, append mode) emits exactly the batch
     windowed aggregate for windows the final watermark closed."""
@@ -141,116 +166,6 @@ def test_stateful_sessionization_stream_matches_batch(spark, tmp_path):
     }
     assert len(got) > 0
     assert got == expected
-
-
-def test_streaming_dedup_matches_batch(spark, tmp_path):
-    """dropDuplicatesWithinWatermark keeps one row per content digest;
-    the surviving digest set equals the batch dropDuplicates result
-    over the same rows."""
-    import datetime as dt
-
-    from etl_database_spark.streaming.dedup import dedup_stream, run_dedup_once
-
-    base = dt.datetime(2025, 3, 1, 0, 0, 0)
-    rows = []
-    for i in range(120):
-        # 40 distinct texts, each arriving 3× within minutes of each
-        # other (well inside the watermark)
-        rows.append((i, base + dt.timedelta(minutes=i), f"document body {i % 40}"))
-    docs = spark.createDataFrame(rows, "doc_id long, ts timestamp, text string")
-    src = str(tmp_path / "docs_src")
-    docs.coalesce(3).write.parquet(src)
-
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    out = str(tmp_path / "dedup_out")
-    run_dedup_once(stream, out, str(tmp_path / "dedup_ckpt"), watermark="2 hours")
-
-    got = spark.read.parquet(out)
-    batch = dedup_stream(docs)
-    assert got.count() == 40
-    assert got.select("digest").distinct().count() == 40
-    assert {r.digest for r in got.select("digest").collect()} == {
-        r.digest for r in batch.select("digest").collect()
-    }
-
-
-def test_streaming_dedup_resumes_from_checkpoint(spark, tmp_path):
-    """A second drain with the same checkpoint must not re-emit
-    already-seen digests from the first drain (state persists)."""
-    import datetime as dt
-
-    from etl_database_spark.streaming.dedup import run_dedup_once
-
-    base = dt.datetime(2025, 3, 1, 0, 0, 0)
-    docs1 = spark.createDataFrame(
-        [(i, base + dt.timedelta(minutes=i), f"body {i % 5}") for i in range(10)],
-        "doc_id long, ts timestamp, text string",
-    )
-    src = str(tmp_path / "src")
-    docs1.write.parquet(src)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    schema = docs1.schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    run_dedup_once(stream, out, ckpt, watermark="2 hours")
-    assert spark.read.parquet(out).count() == 5
-
-    # second wave: same five texts again (later but inside watermark),
-    # plus one genuinely new text
-    docs2 = spark.createDataFrame(
-        [(100 + i, base + dt.timedelta(minutes=20 + i), f"body {i % 5}") for i in range(5)]
-        + [(200, base + dt.timedelta(minutes=30), "brand new body")],
-        "doc_id long, ts timestamp, text string",
-    )
-    docs2.write.mode("append").parquet(src)
-    stream2 = spark.readStream.schema(schema).parquet(src)
-    run_dedup_once(stream2, out, ckpt, watermark="2 hours")
-    final = spark.read.parquet(out)
-    assert final.count() == 6
-    assert final.select("digest").distinct().count() == 6
-
-
-def test_streaming_dedup_state_evicts_after_watermark(spark, tmp_path):
-    """Bounded-state semantics: a digest is dropped from state once the
-    watermark passes it, so the same content arriving much later is
-    re-emitted (one more row), while a re-arrival before eviction is
-    suppressed. This is the property that makes state size ∝ watermark
-    horizon instead of corpus history."""
-    import datetime as dt
-
-    from etl_database_spark.streaming.dedup import run_dedup_once
-
-    base = dt.datetime(2025, 3, 1, 0, 0, 0)
-    src = str(tmp_path / "src")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    schema = "doc_id long, ts timestamp, text string"
-
-    d1 = spark.createDataFrame([(1, base, "the body")], schema)
-    d1.write.parquet(src)
-    run_dedup_once(
-        spark.readStream.schema(d1.schema).parquet(src), out, ckpt, watermark="1 hour"
-    )
-    assert spark.read.parquet(out).count() == 1
-
-    # +10h re-arrival: state still holds the digest at batch start
-    # (watermark from drain 1 is base-1h), so this one is suppressed —
-    # but processing it advances the watermark far past the original
-    # sighting, evicting it.
-    d2 = spark.createDataFrame([(2, base + dt.timedelta(hours=10), "the body")], schema)
-    d2.write.mode("append").parquet(src)
-    run_dedup_once(
-        spark.readStream.schema(d1.schema).parquet(src), out, ckpt, watermark="1 hour"
-    )
-    assert spark.read.parquet(out).count() == 1
-
-    # +20h: the digest was evicted, so the content is re-emitted.
-    d3 = spark.createDataFrame([(3, base + dt.timedelta(hours=20), "the body")], schema)
-    d3.write.mode("append").parquet(src)
-    run_dedup_once(
-        spark.readStream.schema(d1.schema).parquet(src), out, ckpt, watermark="1 hour"
-    )
-    rows = spark.read.parquet(out).collect()
-    assert len(rows) == 2
-    assert {r.doc_id for r in rows} == {1, 3}
 
 
 def test_streaming_near_dup_within_and_across_batches(spark, tmp_path):
@@ -382,50 +297,6 @@ def test_streaming_near_dups_registry_query_equals_batch(spark):
         ).collect()
     }
     assert streamed == batch
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream interval join emits exactly the batch
-    interval join when the watermark outlives the data span."""
-    import datetime as dt
-
-    from etl_database_spark.streaming.joins import (
-        attributed_purchases,
-        run_attribution_once,
-    )
-
-    base = dt.datetime(2025, 3, 1, 0, 0, 0)
-    clicks, purchases = [], []
-    for i in range(300):
-        clicks.append((1000 + i, base + dt.timedelta(minutes=3 * i), i % 9, "click", 0.0))
-    for j in range(80):
-        # Purchases land 0-40 min after some click times; only those
-        # within 30 min of a same-user click should attribute.
-        purchases.append(
-            (5000 + j, base + dt.timedelta(minutes=11 * j + j % 40), j % 9, "purchase", float(j))
-        )
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
-    cdf = spark.createDataFrame(clicks, schema)
-    pdf = spark.createDataFrame(purchases, schema)
-    csrc, psrc = str(tmp_path / "clicks"), str(tmp_path / "purch")
-    cdf.coalesce(2).write.parquet(csrc)
-    pdf.coalesce(2).write.parquet(psrc)
-
-    out = str(tmp_path / "attr_out")
-    run_attribution_once(
-        spark.readStream.schema(cdf.schema).parquet(csrc),
-        spark.readStream.schema(pdf.schema).parquet(psrc),
-        out,
-        str(tmp_path / "ckpt_attr"),
-        "30 minutes",
-        "24 hours",
-    )
-
-    key = lambda r: (r.user_id, r.click_id, r.purchase_id)
-    got = sorted(key(r) for r in spark.read.parquet(out).collect())
-    expected = sorted(key(r) for r in attributed_purchases(cdf, pdf).collect())
-    assert got == expected
-    assert len(got) > 0
 
 
 def test_near_dup_batch_replay_is_idempotent(spark, tmp_path):

@@ -19,7 +19,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from etl_database_spark.operators.asof import asof_join_backward, range_join
-from etl_database_spark.streaming.joins import attributed_purchases
 from etl_database_spark.streaming.sessions import sessionize_batch
 from etl_database_spark.streaming.windowed import windowed_event_counts
 from etl_database_spark.timeutil import normalize_event_time
@@ -93,6 +92,3 @@ def test_asof_join_on_ntz_parquet_with_tolerance(ntz_events):
 
 def test_windowed_counts_and_interval_join_on_ntz_parquet(ntz_events):
     assert windowed_event_counts(ntz_events).count() > 0
-    clicks = ntz_events.where("event_type = 'click'")
-    purchases = ntz_events.where("event_type = 'purchase'")
-    assert attributed_purchases(clicks, purchases).count() > 0
