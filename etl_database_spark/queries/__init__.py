@@ -10,9 +10,13 @@ and the oracle alias every computed column to the same name.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -68,6 +72,45 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return normalize_event_time(df)
     return normalize_event_time(spark.read.parquet(path))
+
+
+# (prefix, sf_dir) -> (mtime of the source table, temp dir, built value)
+_SERVED: dict[tuple[str, str], tuple[float | None, str, Any]] = {}
+
+
+def served_store(sf_dir: str, source: str, prefix: str, build: Callable[[str], Any]):
+    """The per-process cache every store-serving row builds through.
+
+    Returns ``build(tmp_dir)`` for a fresh ``tempfile.mkdtemp(prefix=
+    prefix)`` dir, built once per ``(prefix, sf_dir, mtime of
+    <source>.parquet)``. A rewritten fixture (new mtime) evicts the
+    older entry of the same ``(prefix, sf_dir)`` and deletes its dir;
+    a build that raises leaves no dir behind; every live dir is
+    removed at interpreter exit. Each row keeps its own build
+    lifecycle (batch splits, replay guards) inside ``build``."""
+    src = os.path.join(sf_dir, f"{source}.parquet")
+    mtime = os.path.getmtime(src) if os.path.exists(src) else None
+    slot = (prefix, sf_dir)
+    entry = _SERVED.get(slot)
+    if entry is not None:
+        if entry[0] == mtime:
+            return entry[2]
+        del _SERVED[slot]
+        shutil.rmtree(entry[1], ignore_errors=True)
+    tmp_dir = tempfile.mkdtemp(prefix=prefix)
+    try:
+        value = build(tmp_dir)
+    except BaseException:
+        shutil.rmtree(tmp_dir, ignore_errors=True)
+        raise
+    _SERVED[slot] = (mtime, tmp_dir, value)
+    return value
+
+
+@atexit.register
+def _remove_served_dirs() -> None:
+    for _, tmp_dir, _ in _SERVED.values():
+        shutil.rmtree(tmp_dir, ignore_errors=True)
 
 
 def load_all() -> dict[str, RegisteredQuery]:

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from etl_database_spark.queries import register, table
+from etl_database_spark.queries import register, served_store, table
 
 # Deterministic double-sum pattern — see queries/relational.py module doc.
 DEC = "decimal(18,6)"
@@ -244,27 +244,14 @@ def rfm_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # compacts the first, then serves — and the oracle recomputes the same
 # aggregate DIRECTLY from raw events. Green here proves
 # incremental-partial-merge == full recompute, cross-engine.
-_ROLLUP_CACHE: dict = {}
-
-
 def _rollup_store(spark: SparkSession, sf_dir: str):
-    import os
+    from etl_database_spark.operators.rollup import RollupStore
 
-    src = os.path.join(sf_dir, "events.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in _ROLLUP_CACHE:
-        import shutil
-        import tempfile
-
-        from etl_database_spark.operators.rollup import RollupStore
-
-        for old_key in [k for k in _ROLLUP_CACHE if k[0] == sf_dir and k != key]:
-            old = _ROLLUP_CACHE.pop(old_key)
-            shutil.rmtree(old.path, ignore_errors=True)
+    def build(path):
         ev = table(spark, sf_dir, "events")
         store = RollupStore(
             spark,
-            tempfile.mkdtemp(prefix="spark_graft_rollup_"),
+            path,
             distinct_col="user_id",
             quantile_spec=("value", 0.0, 500.0, 256),
         )
@@ -281,11 +268,9 @@ def _rollup_store(spark: SparkSession, sf_dir: str):
                 "rollup store re-ingested an already-compacted batch; "
                 "served aggregates would double-count first_half"
             )
-        import atexit
+        return store
 
-        atexit.register(shutil.rmtree, store.path, ignore_errors=True)
-        _ROLLUP_CACHE[key] = store
-    return _ROLLUP_CACHE[key]
+    return served_store(sf_dir, "events", "spark_graft_rollup_", build)
 
 
 @register(
@@ -421,7 +406,6 @@ def streaming_rollup_daily_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve the rollup maintained by a two-micro-batch stream; must
     equal the raw-events full recompute (the oracle)."""
     import os
-    import shutil
     import tempfile
 
     from etl_database_spark.streaming.rollup import run_rollup_once
@@ -429,11 +413,12 @@ def streaming_rollup_daily_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_ru_")
-    src = os.path.join(work, "src")
-    store_path = os.path.join(work, "store")
-    ckpt = os.path.join(work, "ckpt")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_stream_ru_", ignore_cleanup_errors=True
+    ) as work:
+        src = os.path.join(work, "src")
+        store_path = os.path.join(work, "store")
+        ckpt = os.path.join(work, "ckpt")
         ev.where(F.col("event_id") % 2 == 0).write.parquet(src)
         run_rollup_once(
             spark, spark.readStream.schema(ev.schema).parquet(src), store_path, ckpt
@@ -444,8 +429,6 @@ def streaming_rollup_daily_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the temp store directory disappears
         out = store.serve().localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -585,28 +568,15 @@ def rollup_daily_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # serves a one-week slice from it — the plan is asserted pruned in
 # tests/test_plans.py, and the oracle recomputes the same slice from
 # the raw table so the pruned scan is hash-verified, not just fast.
-_PART_EVENTS_CACHE: dict = {}
-
-
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    src = os.path.join(sf_dir, "events.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in _PART_EVENTS_CACHE:
-        for old_key in [k for k in _PART_EVENTS_CACHE if k[0] == sf_dir and k != key]:
-            shutil.rmtree(_PART_EVENTS_CACHE.pop(old_key), ignore_errors=True)
-        path = tempfile.mkdtemp(prefix="spark_graft_part_events_")
+    def build(path):
         ev = table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
         # one shuffle keyed by day → one file per day directory; at
         # scale this is the ingest-time write
         ev.repartition("day").write.mode("overwrite").partitionBy("day").parquet(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        _PART_EVENTS_CACHE[key] = path
-    return _PART_EVENTS_CACHE[key]
+        return path
+
+    return served_store(sf_dir, "events", "spark_graft_part_events_", build)
 
 
 @register(
@@ -984,24 +954,10 @@ def orders_snapshot_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verbatim; the oracle recomputes the view from the raw three-way
 # join, so green proves delta-join maintenance == full recompute
 # cross-engine.
-_IVM_CACHE: dict = {}
-
-
 def _ivm_store(spark: SparkSession, sf_dir: str):
-    import os
+    from etl_database_spark.operators.rollup import RollupStore
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in _IVM_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        from etl_database_spark.operators.rollup import RollupStore
-
-        for old_key in [k for k in _IVM_CACHE if k[0] == sf_dir and k != key]:
-            old = _IVM_CACHE.pop(old_key)
-            shutil.rmtree(old.path, ignore_errors=True)
+    def build(path):
         o = table(spark, sf_dir, "orders").where(
             (F.col("o_orderdate") >= "1995-01-01")
             & (F.col("o_orderdate") < "1996-01-01")
@@ -1020,15 +976,15 @@ def _ivm_store(spark: SparkSession, sf_dir: str):
                 )
             )
 
-        store = RollupStore(spark, tempfile.mkdtemp(prefix="spark_graft_ivm_"))
+        store = RollupStore(spark, path)
         store.ingest(delta_join(o.where(F.col("o_orderkey") % 2 == 0)), batch="d1")
         store.compact()
         store.ingest(delta_join(o.where(F.col("o_orderkey") % 2 == 1)), batch="d2")
         if store.ingest(delta_join(o.limit(1)), batch="d1") is not False:
             raise RuntimeError("IVM store replayed an absorbed delta batch")
-        atexit.register(shutil.rmtree, store.path, ignore_errors=True)
-        _IVM_CACHE[key] = store
-    return _IVM_CACHE[key]
+        return store
+
+    return served_store(sf_dir, "orders", "spark_graft_ivm_", build)
 
 
 @register(
@@ -1068,7 +1024,6 @@ def rollup_nation_revenue_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CDC -> delta -> store -> serve path cross-engine. (Extrema are
 # excluded by the store's own retraction gate; RollupStore(keep_raw)
 # + retract_batch is the exact path when they must survive CDC.)
-_CDC_ROLLUP_CACHE: dict = {}
 
 
 def _cdc_snapshots(spark: SparkSession, sf_dir: str):
@@ -1108,22 +1063,11 @@ def _cdc_snapshots(spark: SparkSession, sf_dir: str):
 
 
 def _cdc_rollup_store(spark: SparkSession, sf_dir: str):
-    import os
+    from etl_database_spark.operators.rollup import RollupStore
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in _CDC_ROLLUP_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        from etl_database_spark.operators.rollup import RollupStore
-
-        for old_key in [k for k in _CDC_ROLLUP_CACHE if k[0] == sf_dir and k != key]:
-            old_store = _CDC_ROLLUP_CACHE.pop(old_key)
-            shutil.rmtree(old_store.path, ignore_errors=True)
+    def build(path):
         old, new = _cdc_snapshots(spark, sf_dir)
-        store = RollupStore(spark, tempfile.mkdtemp(prefix="spark_graft_cdcroll_"))
+        store = RollupStore(spark, path)
         # day 0: the base snapshot, then compact (the steady state a
         # long-lived store is in when CDC arrives)
         store.ingest(old.drop("k"), batch="snap0")
@@ -1145,9 +1089,9 @@ def _cdc_rollup_store(spark: SparkSession, sf_dir: str):
         # batch directory per day instead of four (retraction
         # negatives cancel away inside the fold)
         store.compact()
-        atexit.register(shutil.rmtree, store.path, ignore_errors=True)
-        _CDC_ROLLUP_CACHE[key] = store
-    return _CDC_ROLLUP_CACHE[key]
+        return store
+
+    return served_store(sf_dir, "orders", "spark_graft_cdcroll_", build)
 
 
 @register(

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from etl_database_spark.functions import dedup as D
 from etl_database_spark.functions import similarity as S
 from etl_database_spark.functions import text as T
-from etl_database_spark.queries import register, table
+from etl_database_spark.queries import register, served_store, table
 
 
 def _sql_lang_score(lang: str) -> str:
@@ -380,49 +380,25 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a dedup sweep reads the store instead of re-exploding every document
 # into shingles. First call builds the store (one full-corpus pass);
 # every later call is LSH-join + candidate-only verification.
-_MINHASH_SIG_STORE: dict = {}
 _MINHASH_PARAMS = {"n": 7, "num_perm": 32, "bands": 8, "threshold": 0.5}
-
-
-def _evict_stale(cache: dict, sf_dir: str, key: tuple) -> None:
-    """Drop (and delete from disk) cache entries for ``sf_dir`` whose
-    key no longer matches — a rebuilt fixture replaces, not
-    accumulates, its full-corpus store copy on temp disk."""
-    import os
-    import shutil
-
-    for old_key in [k for k in cache if k[0] == sf_dir and k != key]:
-        entry = cache.pop(old_key)
-        path = entry if isinstance(entry, str) else entry.path  # store objects
-        # stores live one level under their mkdtemp dir (…/sigs,
-        # …/edges); remove the mkdtemp parent, not just the leaf, or
-        # long-lived sessions that cycle fixtures accumulate empty
-        # spark_graft_* dirs in /tmp (round-10 advisor finding)
-        parent = os.path.dirname(path)
-        target = parent if os.path.basename(parent).startswith("spark_graft_") else path
-        shutil.rmtree(target, ignore_errors=True)
 
 
 def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
-    # Cache key includes the corpus file's mtime: a rewritten fixture
-    # in the same process invalidates the store instead of silently
-    # serving signatures for deleted documents.
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in _MINHASH_SIG_STORE:
-        _evict_stale(_MINHASH_SIG_STORE, sf_dir, key)
+    def build(tmp_dir):
         d = table(spark, sf_dir, "documents")
         sigs = D.minhash_signatures(
             D.shingles(d, "text", "doc_id", n=_MINHASH_PARAMS["n"]),
             _MINHASH_PARAMS["num_perm"],
         )
-        path = os.path.join(tempfile.mkdtemp(prefix="spark_graft_minhash_"), "sigs")
+        path = os.path.join(tmp_dir, "sigs")
         sigs.write.parquet(path)
-        _MINHASH_SIG_STORE[key] = path
-    return spark.read.parquet(_MINHASH_SIG_STORE[key])
+        return path
+
+    return spark.read.parquet(
+        served_store(sf_dir, "documents", "spark_graft_minhash_", build)
+    )
 
 
 # The one-shot pipeline's effective agreement cut: minhash_near_dups
@@ -439,7 +415,6 @@ _MINHASH_MIN_AGREE = next(
     if a / _MINHASH_PARAMS["num_perm"]
     >= _MINHASH_PARAMS["threshold"] - _MINHASH_EST_MARGIN
 )
-_MINHASH_EDGE_STORE: dict = {}
 
 
 def _minhash_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -455,18 +430,14 @@ def _minhash_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold). Identical parameters to the one-shot pipeline, including
     the est-Jaccard prefilter expressed as the store's min_agree."""
     import os
-    import tempfile
 
     from etl_database_spark.operators.edgestore import EdgeStore
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in _MINHASH_EDGE_STORE:
-        _evict_stale(_MINHASH_EDGE_STORE, sf_dir, key)
+    def build(tmp_dir):
         d = table(spark, sf_dir, "documents")
         store = EdgeStore(
             spark,
-            os.path.join(tempfile.mkdtemp(prefix="spark_graft_mhedges_"), "edges"),
+            os.path.join(tmp_dir, "edges"),
             n=_MINHASH_PARAMS["n"],
             num_perm=_MINHASH_PARAMS["num_perm"],
             bands=_MINHASH_PARAMS["bands"],
@@ -477,8 +448,9 @@ def _minhash_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             store.ingest(d.where(F.col("doc_id") % 3 == i), f"b{i}", corpus=d)
         if store.ingest(d.limit(1), "b0", corpus=d) is not False:
             raise RuntimeError("minhash edge store replayed an absorbed batch")
-        _MINHASH_EDGE_STORE[key] = store
-    return _MINHASH_EDGE_STORE[key].edges()
+        return store
+
+    return served_store(sf_dir, "documents", "spark_graft_mhedges_", build).edges()
 
 
 @register("minhash_near_dups")
@@ -1275,29 +1247,13 @@ def ngram_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The index is built ONCE per (process, sf_dir) and probes read only
 # the n_probe partition directories (partition-pruned scan) — the
 # served-index shape, not a refit per query.
-_IVF_INDEX_CACHE: dict = {}
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str):
-    import os
-
-    # Same mtime keying as the minhash store: a rewritten embeddings
-    # fixture must invalidate the index instead of serving inverted
-    # lists built from deleted vectors.
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in _IVF_INDEX_CACHE:
-        import shutil
-        import tempfile
-
-        for old_key in [k for k in _IVF_INDEX_CACHE if k[0] == sf_dir and k != key]:
-            old = _IVF_INDEX_CACHE.pop(old_key)
-            shutil.rmtree(old.path, ignore_errors=True)
+    def build(path):
         emb = table(spark, sf_dir, "embeddings")
         cents = S.kmeans_fit(emb, dim=64, k=8, max_iter=5)
-        path = tempfile.mkdtemp(prefix="spark_graft_ivf_")
-        _IVF_INDEX_CACHE[key] = S.IvfIndex.build(spark, emb, cents, path)
-    return _IVF_INDEX_CACHE[key]
+        return S.IvfIndex.build(spark, emb, cents, path)
+
+    return served_store(sf_dir, "embeddings", "spark_graft_ivf_", build)
 
 
 @register("ivf_topk_ann")
@@ -2006,8 +1962,6 @@ _CURATION_SERVED_ORACLE = _minhash_checkable_oracle(
     source="surv",
 )
 
-_CURATION_EDGE_STORE: dict = {}
-
 
 def _curation_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality ≥ 0.7 + lang='en' gates, then exact-dedup survivors
@@ -2036,18 +1990,14 @@ def _curation_edge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-batch lifecycle with a replay guard — the same store
     discipline as _pagerank_edges, cached per fixture generation."""
     import os
-    import tempfile
 
     from etl_database_spark.operators.edgestore import EdgeStore
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in _CURATION_EDGE_STORE:
-        _evict_stale(_CURATION_EDGE_STORE, sf_dir, key)
+    def build(tmp_dir):
         surv = _curation_survivors(spark, sf_dir).localCheckpoint(eager=True)
         store = EdgeStore(
             spark,
-            os.path.join(tempfile.mkdtemp(prefix="spark_graft_curedges_"), "edges"),
+            os.path.join(tmp_dir, "edges"),
             n=_MH_CHK["n"],
             num_perm=_MH_CHK["num_perm"],
             bands=_MH_CHK["bands"],
@@ -2083,8 +2033,9 @@ def _curation_edge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "oracle or raise the cap for this fixture"
             )
         surv.unpersist()
-        _CURATION_EDGE_STORE[key] = store
-    return _CURATION_EDGE_STORE[key].edges()
+        return store
+
+    return served_store(sf_dir, "documents", "spark_graft_curedges_", build).edges()
 
 
 @register("corpus_curation_served", oracle=_CURATION_SERVED_ORACLE)
@@ -2543,7 +2494,6 @@ def streaming_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     production run would keep the store and read matches lazily
     instead."""
     import os
-    import shutil
     import tempfile
 
     from etl_database_spark.streaming.near_dup import (
@@ -2554,9 +2504,10 @@ def streaming_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     params = dict(n=_MINHASH_PARAMS["n"], num_perm=_MINHASH_PARAMS["num_perm"],
                   bands=_MINHASH_PARAMS["bands"], threshold=_MINHASH_PARAMS["threshold"])
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_nd_")
-    src = os.path.join(work, "src")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_stream_nd_", ignore_cleanup_errors=True
+    ) as work:
+        src = os.path.join(work, "src")
         d.where(F.col("doc_id") % 2 == 0).write.parquet(src)
         args = (
             os.path.join(work, "store"),
@@ -2583,8 +2534,6 @@ def streaming_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     batch = (
         batch_estimate_pairs(d, "text", "doc_id", **params)
         .select(
@@ -2647,9 +2596,6 @@ def streaming_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus (new docs LSH-join against the stored signature table; their
 # verified edges append); every graph consumer — PageRank, components,
 # audits — serves from it instead of re-verifying the corpus.
-_PAGERANK_EDGE_STORE: dict = {}
-
-
 def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The J≥0.3 5-gram LSH-verified pair graph, served from the
     persisted incremental :class:`~etl_database_spark.operators
@@ -2661,27 +2607,28 @@ def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-joined against the stored signature table, only new edges
     verified), and a corpus day-batch at scale costs a day, not a
     rebuild. Serving is one parquet read + sign fold."""
+    return _pagerank_edge_store(spark, sf_dir).edges()
+
+
+def _pagerank_edge_store(spark: SparkSession, sf_dir: str):
     import os
-    import tempfile
 
     from etl_database_spark.operators.edgestore import EdgeStore
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in _PAGERANK_EDGE_STORE:
-        _evict_stale(_PAGERANK_EDGE_STORE, sf_dir, key)
+    def build(tmp_dir):
         d = table(spark, sf_dir, "documents")
         store = EdgeStore(
             spark,
-            os.path.join(tempfile.mkdtemp(prefix="spark_graft_predges_"), "edges"),
+            os.path.join(tmp_dir, "edges"),
             n=5, num_perm=32, bands=32, threshold=0.3, min_agree=3,
         )
         for i in range(3):
             store.ingest(d.where(F.col("doc_id") % 3 == i), f"b{i}", corpus=d)
         if store.ingest(d.limit(1), "b0", corpus=d) is not False:
             raise RuntimeError("edge store replayed an absorbed batch")
-        _PAGERANK_EDGE_STORE[key] = store
-    return _PAGERANK_EDGE_STORE[key].edges()
+        return store
+
+    return served_store(sf_dir, "documents", "spark_graft_predges_", build)
 
 
 @register("doc_similarity_pagerank")
@@ -3112,32 +3059,19 @@ def winnow_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WINNOW_STORE_CACHE: dict = {}
-
-
-def _fixture_store(cache: dict, spark: SparkSession, sf_dir: str, prefix: str, make):
-    """Shared per-fixture-generation store cache + the three-batch
-    ingest discipline (ingest → compact → ingest → replay no-op guard
-    → ingest) used by every registered store-serving row. ``make``
+def _fixture_store(spark: SparkSession, sf_dir: str, prefix: str, make):
+    """The three-batch ingest discipline (ingest → compact → ingest →
+    replay no-op guard → ingest) over the documents table, shared by
+    the winnow, phrase, char-trigram, token and span store rows. ``make``
     builds the empty store from (spark, temp_path); the modulo-3
     document batches, the compaction and the replay guard are THE one
-    lifecycle, so the four store families cannot drift apart in what
-    their "incremental build" means. Keyed on the fixture's mtime;
-    stale generations are deleted, temp dirs removed atexit."""
-    import os
+    lifecycle, so the five store families cannot drift apart in what
+    their "incremental build" means. The built store is cached per
+    fixture generation by ``served_store``."""
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in cache:
-        import atexit
-        import shutil
-        import tempfile
-
-        for old_key in [k for k in cache if k[0] == sf_dir and k != key]:
-            old = cache.pop(old_key)
-            shutil.rmtree(old.path, ignore_errors=True)
+    def build(path):
         d = table(spark, sf_dir, "documents")
-        store = make(spark, tempfile.mkdtemp(prefix=prefix))
+        store = make(spark, path)
         b1 = d.where(F.col("doc_id") % 3 == 0)
         store.ingest(b1, batch="day1")
         store.compact()
@@ -3148,9 +3082,9 @@ def _fixture_store(cache: dict, spark: SparkSession, sf_dir: str, prefix: str, m
                 "batch; served state would double-count day1"
             )
         store.ingest(d.where(F.col("doc_id") % 3 == 2), batch="day3")
-        atexit.register(shutil.rmtree, store.path, ignore_errors=True)
-        cache[key] = store
-    return cache[key]
+        return store
+
+    return served_store(sf_dir, "documents", prefix, build)
 
 
 def _winnow_store(spark: SparkSession, sf_dir: str):
@@ -3159,7 +3093,7 @@ def _winnow_store(spark: SparkSession, sf_dir: str):
     from etl_database_spark.operators.winnowstore import WinnowStore
 
     return _fixture_store(
-        _WINNOW_STORE_CACHE, spark, sf_dir, "spark_graft_winnow_",
+        spark, sf_dir, "spark_graft_winnow_",
         lambda sp, path: WinnowStore(sp, path, k=_WINNOW_K, w=_WINNOW_W),
     )
 
@@ -3188,17 +3122,17 @@ def streaming_winnowstore_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS similarity pairs served from a stream-maintained winnow
     store; must equal the one-shot full-corpus computation."""
     import os
-    import shutil
     import tempfile
 
     from etl_database_spark.streaming.winnow import run_winnow_once
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_winnow_")
-    src = os.path.join(work, "src")
-    store_path = os.path.join(work, "store")
-    ckpt = os.path.join(work, "ckpt")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_stream_winnow_", ignore_cleanup_errors=True
+    ) as work:
+        src = os.path.join(work, "src")
+        store_path = os.path.join(work, "store")
+        ckpt = os.path.join(work, "ckpt")
         d.where(F.col("doc_id") % 2 == 0).write.parquet(src)
         run_winnow_once(
             spark,
@@ -3222,8 +3156,6 @@ def streaming_winnowstore_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id_a", "id_b")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -3329,15 +3261,13 @@ def logreg_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PHRASE_N = 3
 _PHRASE_TOPK = 3
 
-_PHRASE_INDEX_CACHE: dict = {}
-
 
 def _phrase_index(spark: SparkSession, sf_dir: str):
     """Three-batch PhraseIndexStore, cached per fixture generation."""
     from etl_database_spark.operators.phraseindex import PhraseIndexStore
 
     return _fixture_store(
-        _PHRASE_INDEX_CACHE, spark, sf_dir, "spark_graft_phraseidx_",
+        spark, sf_dir, "spark_graft_phraseidx_",
         lambda sp, path: PhraseIndexStore(sp, path, n=_PHRASE_N),
     )
 
@@ -3379,16 +3309,13 @@ def phrase_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (deterministic, replayed in SQL); the oracle recomputes the result
 # with a direct contains scan — a green hash proves index-accelerated
 # substring search equals the full scan.
-_SUBSTR_INDEX_CACHE: dict = {}
-
-
 def _char_trigram_index(spark: SparkSession, sf_dir: str):
     """Three-batch unit='char' PhraseIndexStore, cached per fixture
     generation."""
     from etl_database_spark.operators.phraseindex import PhraseIndexStore
 
     return _fixture_store(
-        _SUBSTR_INDEX_CACHE, spark, sf_dir, "spark_graft_chartrgm_",
+        spark, sf_dir, "spark_graft_chartrgm_",
         lambda sp, path: PhraseIndexStore(sp, path, n=3, unit="char"),
     )
 
@@ -3455,17 +3382,17 @@ def streaming_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-df trigram posting lists served from a stream-maintained
     phrase index; must equal the one-shot full-corpus computation."""
     import os
-    import shutil
     import tempfile
 
     from etl_database_spark.streaming.phrase import run_phrase_once
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_phrase_")
-    src = os.path.join(work, "src")
-    store_path = os.path.join(work, "store")
-    ckpt = os.path.join(work, "ckpt")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_stream_phrase_", ignore_cleanup_errors=True
+    ) as work:
+        src = os.path.join(work, "src")
+        store_path = os.path.join(work, "store")
+        ckpt = os.path.join(work, "ckpt")
         d.where(F.col("doc_id") % 2 == 0).write.parquet(src)
         run_phrase_once(
             spark,
@@ -3487,8 +3414,6 @@ def streaming_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("phrase", "doc_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -3511,18 +3436,18 @@ def streaming_edgestore_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     EdgeStore (portable MinHash-LSH, two micro-batches); must equal
     the one-shot full-corpus pipeline."""
     import os
-    import shutil
     import tempfile
 
     from etl_database_spark.streaming.edges import run_edges_once
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_edges_")
-    src = os.path.join(work, "src")
-    store_path = os.path.join(work, "store")
-    ckpt = os.path.join(work, "ckpt")
-    params = dict(_MH_CHK, min_agree=10, portable=True)
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_stream_edges_", ignore_cleanup_errors=True
+    ) as work:
+        src = os.path.join(work, "src")
+        store_path = os.path.join(work, "store")
+        ckpt = os.path.join(work, "ckpt")
+        params = dict(_MH_CHK, min_agree=10, portable=True)
         d.where(F.col("doc_id") % 2 == 0).write.parquet(src)
         run_edges_once(
             spark,
@@ -3547,8 +3472,6 @@ def streaming_edgestore_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id_a", "id_b")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -3672,28 +3595,12 @@ def doc_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DSIR_STORE_CACHE: dict = {}
-
-
 def _dsir_store(spark: SparkSession, sf_dir: str):
-    import os
+    from etl_database_spark.operators.dsirstore import DsirStore
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in _DSIR_STORE_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        from etl_database_spark.operators.dsirstore import DsirStore
-
-        for old_key in [k for k in _DSIR_STORE_CACHE if k[0] == sf_dir and k != key]:
-            old = _DSIR_STORE_CACHE.pop(old_key)
-            shutil.rmtree(old.path, ignore_errors=True)
+    def build(path):
         d = table(spark, sf_dir, "documents")
-        store = DsirStore(
-            spark, tempfile.mkdtemp(prefix="spark_graft_dsir_"), n_buckets=_DSIR_BUCKETS
-        )
+        store = DsirStore(spark, path, n_buckets=_DSIR_BUCKETS)
         store.set_target(d.where(F.col("lang") == "en"))
         # three modulo batches with a compaction and forced replay in
         # between — the lifecycle the store exists for
@@ -3703,9 +3610,9 @@ def _dsir_store(spark: SparkSession, sf_dir: str):
         store.ingest(d.where(F.col("doc_id") % 3 == 2), batch="b2")
         if store.ingest(d.limit(1), batch="b0") is not False:
             raise RuntimeError("DSIR store replayed an absorbed batch")
-        atexit.register(shutil.rmtree, store.path, ignore_errors=True)
-        _DSIR_STORE_CACHE[key] = store
-    return _DSIR_STORE_CACHE[key]
+        return store
+
+    return served_store(sf_dir, "documents", "spark_graft_dsir_", build)
 
 
 @register("dsir_incremental_selection")
@@ -3734,15 +3641,12 @@ def dsir_incremental_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tokenize pass is the cost ceiling per query; this is the amortized
 # form (ingest pays tokenization once, queries touch |Q| posting
 # lists).
-_TOKEN_INDEX_CACHE: dict = {}
-
-
 def _token_index(spark: SparkSession, sf_dir: str):
     """Three-batch TokenIndexStore, cached per fixture generation."""
     from etl_database_spark.operators.tokenindex import TokenIndexStore
 
     return _fixture_store(
-        _TOKEN_INDEX_CACHE, spark, sf_dir, "spark_graft_tokenidx_",
+        spark, sf_dir, "spark_graft_tokenidx_",
         lambda sp, path: TokenIndexStore(sp, path),
     )
 
@@ -3782,18 +3686,18 @@ def streaming_bm25_index_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc_bm25_scores served from a stream-maintained token index;
     must equal the one-shot full-corpus computation."""
     import os
-    import shutil
     import tempfile
 
     from etl_database_spark.functions.rank import ranked_topk_small
     from etl_database_spark.streaming.tokenidx import run_tokenidx_once
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_tokenidx_")
-    src = os.path.join(work, "src")
-    store_path = os.path.join(work, "store")
-    ckpt = os.path.join(work, "ckpt")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_stream_tokenidx_", ignore_cleanup_errors=True
+    ) as work:
+        src = os.path.join(work, "src")
+        store_path = os.path.join(work, "store")
+        ckpt = os.path.join(work, "ckpt")
         d.where(F.col("doc_id") % 2 == 0).write.parquet(src)
         run_tokenidx_once(
             spark, spark.readStream.schema(d.schema).parquet(src), store_path, ckpt
@@ -3817,8 +3721,6 @@ def streaming_bm25_index_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("bm25_rank")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -3930,16 +3832,16 @@ def streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness signal (plus the pytest batch-equivalence suite in
     tests/test_semdedup.py)."""
     import os
-    import shutil
     import tempfile
 
     from etl_database_spark.streaming.semdedup import run_semdedup_once
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = _semdedup_seed_centroids(spark, emb)
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_sd_")
-    src = os.path.join(work, "src")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_stream_sd_", ignore_cleanup_errors=True
+    ) as work:
+        src = os.path.join(work, "src")
         emb.where(F.col("vec_id") % 2 == 0).write.parquet(src)
         args = (
             os.path.join(work, "store"),
@@ -3975,8 +3877,6 @@ def streaming_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     assigned = S.semantic_assign(emb, cents).cache()
     assigned.count()
     batch = (
@@ -4623,29 +4523,13 @@ def daily_event_type_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # one-shot SQL as bloom_seen_fingerprints — a green hash therefore
 # proves incremental ingest + compact + replay-no-op == one-shot build,
 # cross-engine and down to the packed bits.
-_BLOOM_STORE_CACHE: dict = {}
-
-
 def _bloom_store(spark: SparkSession, sf_dir: str):
-    import os
+    from etl_database_spark.operators.bloomstore import BloomStore
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in _BLOOM_STORE_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        from etl_database_spark.operators.bloomstore import BloomStore
-
-        for old_key in [k for k in _BLOOM_STORE_CACHE if k[0] == sf_dir and k != key]:
-            old = _BLOOM_STORE_CACHE.pop(old_key)
-            shutil.rmtree(old.path, ignore_errors=True)
+    def build(path):
         d = table(spark, sf_dir, "documents")
         fp = T.fingerprint_md5(F.col("text"))
-        store = BloomStore(
-            spark, tempfile.mkdtemp(prefix="spark_graft_bloom_"), m_bits=_BLOOM_M
-        )
+        store = BloomStore(spark, path, m_bits=_BLOOM_M)
         first = d.where(F.col("source").isin([f"src{i}" for i in range(5)]))
         second = d.where(F.col("source").isin([f"src{i}" for i in range(5, 10)]))
         store.ingest(first.select(fp.alias("fp")), "fp", batch="day1")
@@ -4656,9 +4540,9 @@ def _bloom_store(spark: SparkSession, sf_dir: str):
                 "bloom store re-ingested an already-compacted batch; "
                 "the manifest/compaction contract is broken"
             )
-        atexit.register(shutil.rmtree, store.path, ignore_errors=True)
-        _BLOOM_STORE_CACHE[key] = store
-    return _BLOOM_STORE_CACHE[key]
+        return store
+
+    return served_store(sf_dir, "documents", "spark_graft_bloom_", build)
 
 
 @register("bloom_incremental_membership", oracle=_BLOOM_ORACLE)
@@ -4762,43 +4646,15 @@ def bloom_gated_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle is the SAME one-shot SQL as duplicate_span_stats — counts are
 # additive, so a green hash proves incremental ingest + compact +
 # replay-no-op == full-corpus recompute, per document, cross-engine.
-_SPAN_STORE_CACHE: dict = {}
-
-
 def _span_store(spark: SparkSession, sf_dir: str):
-    import os
+    """Three-batch SpanStore over the documents table, cached per
+    fixture generation (_fixture_store)."""
+    from etl_database_spark.operators.spanstore import SpanStore
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    key = (sf_dir, os.path.getmtime(src) if os.path.exists(src) else None)
-    if key not in _SPAN_STORE_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        from etl_database_spark.operators.spanstore import SpanStore
-
-        for old_key in [k for k in _SPAN_STORE_CACHE if k[0] == sf_dir and k != key]:
-            old = _SPAN_STORE_CACHE.pop(old_key)
-            shutil.rmtree(old.path, ignore_errors=True)
-        d = table(spark, sf_dir, "documents")
-        store = SpanStore(
-            spark, tempfile.mkdtemp(prefix="spark_graft_spans_"), w=_SPAN_W
-        )
-        b1 = d.where(F.col("doc_id") % 3 == 0)
-        b2 = d.where(F.col("doc_id") % 3 == 1)
-        b3 = d.where(F.col("doc_id") % 3 == 2)
-        store.ingest(b1, batch="day1")
-        store.compact()
-        store.ingest(b2, batch="day2")
-        if store.ingest(b1, batch="day1") is not False:
-            raise RuntimeError(
-                "span store re-ingested an already-compacted batch; "
-                "profiled span stats would double-count day1 windows"
-            )
-        store.ingest(b3, batch="day3")
-        atexit.register(shutil.rmtree, store.path, ignore_errors=True)
-        _SPAN_STORE_CACHE[key] = store
-    return _SPAN_STORE_CACHE[key]
+    return _fixture_store(
+        spark, sf_dir, "spark_graft_spans_",
+        lambda sp, path: SpanStore(sp, path, w=_SPAN_W),
+    )
 
 
 @register("spanstore_incremental_stats", oracle=_SPAN_STATS_ORACLE)
@@ -5237,10 +5093,8 @@ def streaming_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Membership served from a stream-maintained Bloom store; must
     equal the one-shot filter bit-for-bit."""
     import os
-    import shutil
     import tempfile
 
-    from etl_database_spark.functions import bloom as B
     from etl_database_spark.streaming.bloom import run_bloom_once
 
     d = table(spark, sf_dir, "documents")
@@ -5248,11 +5102,12 @@ def streaming_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen = d.where(F.col("source").isin([f"src{i}" for i in range(10)])).select(
         "doc_id", fp.alias("fp")
     )
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_bloom_")
-    src = os.path.join(work, "src")
-    store_path = os.path.join(work, "store")
-    ckpt = os.path.join(work, "ckpt")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_stream_bloom_", ignore_cleanup_errors=True
+    ) as work:
+        src = os.path.join(work, "src")
+        store_path = os.path.join(work, "store")
+        ckpt = os.path.join(work, "ckpt")
         seen.where(F.col("doc_id") % 2 == 0).select("fp").write.parquet(src)
         run_bloom_once(
             spark,
@@ -5284,8 +5139,6 @@ def streaming_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 
@@ -5302,17 +5155,17 @@ def streaming_spanstore_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc span profile served from a stream-maintained span
     store; must equal the one-shot full-corpus computation."""
     import os
-    import shutil
     import tempfile
 
     from etl_database_spark.streaming.spans import run_spans_once
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="spark_graft_stream_spans_")
-    src = os.path.join(work, "src")
-    store_path = os.path.join(work, "store")
-    ckpt = os.path.join(work, "ckpt")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="spark_graft_stream_spans_", ignore_cleanup_errors=True
+    ) as work:
+        src = os.path.join(work, "src")
+        store_path = os.path.join(work, "store")
+        ckpt = os.path.join(work, "ckpt")
         d.where(F.col("doc_id") % 2 == 0).write.parquet(src)
         run_spans_once(
             spark,
@@ -5330,8 +5183,6 @@ def streaming_spanstore_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             w=_SPAN_W,
         )
         out = store.profile(d).orderBy("doc_id").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out
 
 

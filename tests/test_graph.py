@@ -191,23 +191,43 @@ def test_capped_route_exact_restores_cap_lost_pairs(spark):
     assert routed == exact
 
 
-def test_pagerank_edge_store_serves_one_shot_build(spark):
+def test_pagerank_edge_store_serves_one_shot_build(spark, monkeypatch):
     """doc_similarity_pagerank's persisted edge store must serve the
     same ranks as an un-stored one-shot build of the same LSH
     pipeline (store round-trip changes nothing), and a second serve
-    must not rebuild (same parquet path)."""
+    must go through the served-store cache without rebuilding (same
+    store object, same parquet path)."""
     from etl_database_spark.functions import dedup as D
     from etl_database_spark.functions.graph import pagerank
     from etl_database_spark.queries import llmdata as L
     from etl_database_spark.queries import load_all, table
+
+    served, builds = [], []
+    real_served_store = L.served_store
+
+    def recording_served_store(sf_dir, source, prefix, build):
+        if prefix != "spark_graft_predges_":
+            return real_served_store(sf_dir, source, prefix, build)
+
+        def counted_build(tmp_dir):
+            builds.append(tmp_dir)
+            return build(tmp_dir)
+
+        store = real_served_store(sf_dir, source, prefix, counted_build)
+        served.append(store)
+        return store
+
+    monkeypatch.setattr(L, "served_store", recording_served_store)
 
     sf = "/root/testdata/sf0.001"
     stored = {
         (r.doc_id, r.rank)
         for r in load_all()["doc_similarity_pagerank"].fn(spark, sf).collect()
     }
-    key = next(k for k in L._PAGERANK_EDGE_STORE if k[0] == sf)
-    path_first = L._PAGERANK_EDGE_STORE[key]
+    assert len(served) == 1, "the row must serve its edges through served_store"
+    store_first = served[0]
+    path_first = store_first.path
+    builds_first = len(builds)
     d = table(spark, sf, "documents")
     pairs = D.minhash_near_duplicates(
         d, "text", "doc_id", n=5, num_perm=32, bands=32, threshold=0.3,
@@ -219,7 +239,11 @@ def test_pagerank_edge_store_serves_one_shot_build(spark):
     }
     assert stored == oneshot
     load_all()["doc_similarity_pagerank"].fn(spark, sf).count()
-    assert L._PAGERANK_EDGE_STORE[key] == path_first
+    assert len(served) == 2, "the second serve must go through served_store"
+    assert len(builds) == builds_first, "the second serve must not rebuild"
+    store_second = served[1]
+    assert store_second is store_first
+    assert store_second.path == path_first
 
 
 def test_minhash_edge_store_equals_one_shot(spark):
