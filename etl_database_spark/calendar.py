@@ -1,33 +1,43 @@
 """Business-day calendar dimension.
 
 Re-expresses the reference's calendar build (tcalendardays + tholidays,
-onboarding/sql/dataset_setup.sql:430-513) as pure DataFrame ops:
+onboarding/sql/dataset_setup.sql:430-513). The calendar is a bounded
+dimension (3.65k rows per decade), so it is built on the driver and
+handed to Spark as a local relation: queries over it start no job to
+build it, and joins broadcast it without collecting it first.
 
-- day sequence: ``sequence(start, end, interval 1 day)`` + ``explode``
-  (vs PostgreSQL generate_series, dataset_setup.sql:473);
+- day sequence: every date in [start, end] (vs PostgreSQL
+  generate_series, dataset_setup.sql:473);
 - ``downum``: 0=Sunday..6=Saturday (EXTRACT(DOW), dataset_setup.sql:470);
 - ``isbusday``: weekday (dataset_setup.sql:471);
 - ``isholiday``: membership in the holiday set (the reference uses an
-  IN-subquery against tholidays, dataset_setup.sql:481-483 — here a
-  left-semi join so the holiday table can be arbitrarily large);
-- ``previous_business_date``: running MAX of workdays over a
-  1-preceding window (the reference's per-row correlated MAX,
-  dataset_setup.sql:486-493 — decorrelated into a single window pass).
-
-Scale: the calendar is a bounded dimension (3.65k rows per decade), so
-the single-partition ordered window is constant cost regardless of fact
-volume; consumers broadcast-join it (see queries.relational).
+  IN-subquery against tholidays, dataset_setup.sql:481-483); a holiday
+  DataFrame is collected to its distinct dates inside [start, end];
+- ``previous_business_date``: the last earlier workday, carried by one
+  running pass over the days (the reference's per-row correlated MAX,
+  dataset_setup.sql:486-493).
 """
 
 from __future__ import annotations
 
+import datetime as dt
 from collections.abc import Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 DOW_NAMES = ["Sunday", "Monday", "Tuesday", "Wednesday", "Thursday", "Friday", "Saturday"]
+
+_CALENDAR = pa.schema([
+    pa.field("fulldate", pa.date32(), False),
+    pa.field("downum", pa.int64(), False),
+    pa.field("downame", pa.string(), False),
+    pa.field("isbusday", pa.bool_(), False),
+    pa.field("isholiday", pa.bool_(), False),
+    pa.field("previous_business_date", pa.date32()),
+])
 
 
 def build_calendar(
@@ -39,41 +49,26 @@ def build_calendar(
     """Build the calendar dimension for [start, end] (inclusive).
 
     ``holidays`` is an iterable of ISO date strings or a DataFrame with
-    a ``holiday_date`` column.
+    a ``holiday_date`` column; repeated dates (one row per holiday
+    name) and dates outside the range are ignored.
     """
-    days = spark.sql(
-        f"SELECT explode(sequence(DATE '{start}', DATE '{end}', interval 1 day)) AS fulldate"
-    )
+    first, last = dt.date.fromisoformat(start), dt.date.fromisoformat(end)
     if isinstance(holidays, DataFrame):
-        hol = holidays.select(F.col("holiday_date").cast("date"))
+        day = F.col("holiday_date").cast("date")
+        hol = {r[0] for r in holidays.select(day).where(day.between(first, last)).collect()}
     else:
-        hol = spark.createDataFrame(
-            [(h,) for h in holidays] or [("0001-01-01",)], "holiday_date string"
-        ).select(F.col("holiday_date").cast("date"))
-    # A holiday source may carry several rows per date (one per holiday
-    # NAME); without the distinct, the left join below would duplicate
-    # those calendar days and every downstream calendar join would
-    # multiply matching fact rows.
-    hol = hol.distinct()
+        hol = {dt.date.fromisoformat(h) for h in holidays}
 
-    # dayofweek(): 1=Sunday..7=Saturday → reference downum 0=Sunday..6.
-    cal = (
-        days.withColumn("downum", (F.dayofweek("fulldate") - F.lit(1)).cast("long"))
-        .withColumn("downame", F.element_at(F.lit(DOW_NAMES), F.col("downum").cast("int") + 1))
-        .withColumn("isbusday", ~F.col("downum").isin(0, 6))
-        .join(
-            F.broadcast(hol.withColumn("_is_hol", F.lit(True))),
-            F.col("fulldate") == F.col("holiday_date"),
-            "left",
-        )
-        .withColumn("isholiday", F.coalesce("_is_hol", F.lit(False)))
-        .drop("holiday_date", "_is_hol")
-    )
-    w = W.orderBy("fulldate").rowsBetween(W.unboundedPreceding, -1)
-    return cal.withColumn(
-        "previous_business_date",
-        F.max(F.when(F.col("isbusday") & ~F.col("isholiday"), F.col("fulldate"))).over(w),
-    )
+    rows, prev = [], None
+    for i in range((last - first).days + 1):
+        d = first + dt.timedelta(days=i)
+        downum = d.isoweekday() % 7  # ISO 7=Sunday → reference 0=Sunday
+        isbusday, isholiday = downum not in (0, 6), d in hol
+        rows.append(dict(fulldate=d, downum=downum, downame=DOW_NAMES[downum],
+                         isbusday=isbusday, isholiday=isholiday, previous_business_date=prev))
+        if isbusday and not isholiday:
+            prev = d
+    return spark.createDataFrame(pa.Table.from_pylist(rows, _CALENDAR))
 
 
 def next_business_date(cal: DataFrame) -> DataFrame:

@@ -62,7 +62,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_database_spark.maintenance import data_dirs
+from etl_database_spark.maintenance import data_dirs, read_parquet
 from etl_database_spark.metadata import MetadataSpec, parse_date, parse_label
 from etl_database_spark.registry import STATUS_ID, DatasetRegistry, _tmp_path
 
@@ -263,7 +263,10 @@ class TargetTable:
         return os.path.exists(self.path)
 
     def read(self) -> DataFrame:
-        return self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        """The table under the union of its files' schemas — a
+        ``mergeSchema`` read whose schema is read from the footers on
+        the driver (``maintenance.read_parquet``), not by a Spark job."""
+        return read_parquet(self.spark, self.path, merge=True)
 
     def columns(self) -> list[str]:
         """The union of the column names in the table's Parquet footers,

@@ -23,10 +23,12 @@ import os
 import shutil
 from collections.abc import Iterator
 
+import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_type
 
 from etl_database_spark.registry import _swap_in, _tmp_path
 
@@ -47,20 +49,78 @@ def data_dirs(path: str) -> Iterator[tuple[str, list[str]]]:
             yield dirpath, data
 
 
-def footer_schema(files: list[str]) -> T.StructType:
+def footer_schema(spark: SparkSession, files: list[str]) -> T.StructType:
     """The union by name of the files' schemas, read from their Parquet
-    footers on the driver (Spark's own schema record when it wrote the
-    file, else the Arrow schema) — what a ``mergeSchema`` read finds,
-    without its Spark job."""
+    footers on the driver — what Spark's schema inference finds over
+    the same files (a ``mergeSchema`` read over all of them, a plain
+    read over the first), without its Spark job. A file Spark wrote
+    carries Spark's own schema record; any other is mapped from its
+    Parquet types as Spark's reader maps them: a naive timestamp is
+    TIMESTAMP_NTZ (under ``spark.sql.parquet.inferTimestampNTZ.enabled``),
+    INT96 is TIMESTAMP, and TIMESTAMP(NANOS) is a long under
+    ``spark.sql.legacy.parquet.nanosAsLong`` and an AnalysisException
+    otherwise. Every field reads back nullable, as in any file scan."""
+    conf = spark.conf
+    prefer_ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
+    nanos_as_long = conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true"
     fields: dict[str, T.StructField] = {}
     for f in files:
-        schema = pq.read_schema(f)
-        spark_json = (schema.metadata or {}).get(SPARK_SCHEMA_KEY)
-        struct = (T.StructType.fromJson(json.loads(spark_json)) if spark_json
-                  else from_arrow_schema(schema))
+        meta = pq.read_metadata(f)
+        spark_json = (meta.metadata or {}).get(SPARK_SCHEMA_KEY)
+        if spark_json:
+            struct = T.StructType.fromJson(json.loads(spark_json))
+        else:
+            int96 = any(meta.schema.column(i).physical_type == "INT96"
+                        for i in range(meta.num_columns))
+            struct = _spark_type(meta.schema.to_arrow_schema(), int96, nanos_as_long, prefer_ntz)
         for fld in struct.fields:
             fields.setdefault(fld.name, fld)
     return T.StructType(list(fields.values()))
+
+
+# Parquet's unsigned ints widen to the next signed Spark type.
+_UNSIGNED = {8: T.ShortType(), 16: T.IntegerType(), 32: T.LongType(), 64: T.DecimalType(20, 0)}
+
+
+def _spark_type(t, int96: bool, nanos_as_long: bool, prefer_ntz: bool) -> T.DataType:
+    """The Spark type Spark's Parquet reader gives the Arrow type ``t``
+    of a column read from a footer; ``t`` may be an Arrow schema.
+    pyarrow reads INT96 and TIMESTAMP(NANOS) both as ``timestamp[ns]``,
+    so ``int96`` tells them apart (a file holds one or the other)."""
+    def sub(u):
+        return _spark_type(u, int96, nanos_as_long, prefer_ntz)
+
+    if isinstance(t, (pa.Schema, pa.StructType)):
+        return T.StructType([T.StructField(f.name, sub(f.type)) for f in t])
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+        return T.ArrayType(sub(t.value_type))
+    if pa.types.is_map(t):
+        return T.MapType(sub(t.key_type), sub(t.item_type))
+    if pa.types.is_timestamp(t) and t.unit == "ns":
+        if int96:
+            return T.TimestampType()
+        if not nanos_as_long:
+            raise AnalysisException(
+                "[PARQUET_TYPE_ILLEGAL] Illegal Parquet type: "
+                f"INT64 (TIMESTAMP(NANOS,{str(t.tz is not None).lower()})).")
+        return T.LongType()
+    if pa.types.is_unsigned_integer(t):
+        return _UNSIGNED[t.bit_width]
+    if pa.types.is_time(t):
+        raise AnalysisException(f"[PARQUET_TYPE_ILLEGAL] Illegal Parquet type: {t}.")
+    return from_arrow_type(t, prefer_timestamp_ntz=prefer_ntz)
+
+
+def read_parquet(spark: SparkSession, path: str, merge: bool = False) -> DataFrame:
+    """``spark.read.parquet(path)`` — with ``mergeSchema`` when
+    ``merge`` — whose schema comes from ``footer_schema`` instead of an
+    inference job. Hive partition columns are still discovered from the
+    directory names, as Spark does for any read. A path with no data
+    files is left to Spark, which fails on it as before."""
+    files = [f for _, fs in data_dirs(path) for f in fs] if os.path.isdir(path) else [path]
+    if not files:
+        return spark.read.parquet(path)
+    return spark.read.schema(footer_schema(spark, files if merge else files[:1])).parquet(path)
 
 
 def compact_table(spark: SparkSession, path: str, target_files: int = 8) -> int:
@@ -80,7 +140,7 @@ def compact_table(spark: SparkSession, path: str, target_files: int = 8) -> int:
                 continue
             tmp = os.path.normpath(os.path.join(staging, os.path.relpath(pdir, path)))
             (
-                spark.read.schema(footer_schema(files)).parquet(pdir)
+                spark.read.schema(footer_schema(spark, files)).parquet(pdir)
                 .coalesce(target_files)
                 .write.parquet(tmp)
             )

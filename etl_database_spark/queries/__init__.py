@@ -44,7 +44,10 @@ def register(name: str, oracle: str | None = None):
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table. Column pruning / predicate pushdown is
-    handled by Catalyst on top of this parquet scan.
+    handled by Catalyst on top of this parquet scan. The schema comes
+    from the table's first Parquet footer on the driver
+    (``maintenance.read_parquet``) — the same schema Spark would infer,
+    without the inference job each read would otherwise start.
 
     Timestamp normalization happens centrally here, because the fixture
     has shipped two encodings across generations:
@@ -56,6 +59,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       TIMESTAMP_NTZ, which ``unix_micros`` rejects; cast to TIMESTAMP
       (session TZ pinned UTC → value-preserving metadata-only cast).
     """
+    from etl_database_spark.maintenance import read_parquet
     from etl_database_spark.timeutil import normalize_event_time
 
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -65,13 +69,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Left enabled for the session: execution re-reads the conf, and
         # it only affects NANOS columns (none elsewhere in the schema).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         if dict(df.dtypes).get("ts") == "bigint":
             # Integer division — ns values exceed double's 2^53 mantissa,
             # so a float path would corrupt timestamps.
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return normalize_event_time(df)
-    return normalize_event_time(spark.read.parquet(path))
+    return normalize_event_time(read_parquet(spark, path))
 
 
 # (prefix, sf_dir) -> (mtime of the source table, temp dir, built value)

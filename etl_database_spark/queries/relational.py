@@ -190,8 +190,8 @@ def latest_window_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# W1 — business-day calendar build: sequence+explode, DOW, holiday
-# flagging, previous-business-day window (dataset_setup.sql:430-513).
+# W1 — business-day calendar build: day sequence, DOW, holiday
+# flagging, previous business day (dataset_setup.sql:430-513).
 @register(
     "business_calendar",
     oracle=f"""
@@ -213,9 +213,10 @@ def latest_window_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def business_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar dimension via the library builder (sequence+explode +
-    running-max window). The global-order window is fine here: the
-    calendar is bounded (~4k rows for a decade) however large the facts."""
+    """Calendar dimension via the library builder: a local relation
+    built on the driver (one running pass for the previous business
+    day), so the row starts no Spark job to build it. The calendar is
+    bounded (~4k rows for a decade) however large the facts."""
     from etl_database_spark.calendar import build_calendar
 
     return (

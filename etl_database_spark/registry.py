@@ -23,7 +23,10 @@ The table is a few hundred rows, so a Spark job per step (an aggregate
 for ``max(datasetid)``, a window shuffle, a ``coalesce(1)`` write)
 would cost far more than the work itself. Reads stay Spark:
 ``datasets()`` and ``active()`` return DataFrames over the same
-directory, so SQL consumers and report views join against it.
+directory, so SQL consumers and report views join against it. They
+read with the declared ``DATASET_SCHEMA`` — the schema Spark would
+infer, for Arrow-written and INT96 legacy files alike — so building
+them starts no schema-inference job.
 
 The registry is small (one row per import), so full-rewrite semantics
 are fine at any realistic cardinality — 100 TB of *data* is still only
@@ -164,7 +167,7 @@ class DatasetRegistry:
     # -- dataset rows ----------------------------------------------------
     def datasets(self) -> DataFrame:
         if os.path.exists(self.path):
-            return self.spark.read.parquet(self.path)
+            return self.spark.read.schema(DATASET_SCHEMA).parquet(self.path)
         return self.spark.createDataFrame([], DATASET_SCHEMA)
 
     def _rows(self) -> list[dict]:

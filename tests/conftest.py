@@ -27,3 +27,23 @@ def spark(tmp_path_factory):
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` → (fn(), ids of the Spark jobs fn started),
+    counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-of-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "jobs_of")
+        try:
+            out = fn()
+            return out, list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    return run

@@ -1,8 +1,15 @@
 import datetime as dt
 
-from pyspark.sql import functions as F
+import duckdb
+import pytest
 
 from etl_database_spark.calendar import asof_business_day, build_calendar, next_business_date
+from etl_database_spark.queries import load_all
+
+# Importing a query module before load_all() would change the
+# registry's order, and with it the driver window other tests check.
+load_all()
+from etl_database_spark.queries.relational import HOLIDAYS  # noqa: E402
 
 
 def test_calendar_shape_and_dow(spark):
@@ -74,3 +81,52 @@ def test_duplicate_holiday_rows_do_not_duplicate_days(spark):
     assert cal.count() == 7
     assert cal.where("fulldate = DATE '2024-01-01'").count() == 1
     assert cal.where("isholiday").count() == 1
+
+
+def _duckdb_calendar(start, end, holidays):
+    """The calendar as the ``business_calendar`` oracle builds it:
+    generate_series, DOW flags, holiday membership, running-max window."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE hol (h DATE)")
+    if holidays:
+        con.executemany("INSERT INTO hol VALUES (?)", [(h,) for h in holidays])
+    return con.execute(f"""
+        WITH cal AS (
+          SELECT CAST(d AS DATE) AS fulldate,
+                 CAST(EXTRACT(DOW FROM d) AS BIGINT) AS downum,
+                 dayname(d) AS downame,
+                 EXTRACT(DOW FROM d) NOT IN (0, 6) AS isbusday,
+                 CAST(d AS DATE) IN (SELECT h FROM hol) AS isholiday
+          FROM generate_series(TIMESTAMP '{start}', TIMESTAMP '{end}', INTERVAL 1 DAY) t(d)
+        )
+        SELECT *, MAX(CASE WHEN isbusday AND NOT isholiday THEN fulldate END)
+                    OVER (ORDER BY fulldate ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                    AS previous_business_date
+        FROM cal ORDER BY fulldate
+    """).fetchall()
+
+
+@pytest.mark.parametrize("start,end,holidays", [
+    ("1994-12-20", "2001-12-31", HOLIDAYS),
+    ("2000-01-01", "2000-03-31", HOLIDAYS),  # starts on a Saturday holiday
+    ("1996-01-01", "1996-01-31", HOLIDAYS),  # starts on a Monday holiday
+    ("1998-06-01", "1998-07-31", ["1990-07-04", "1998-07-03", "2010-01-01"]),  # some outside
+    ("1998-06-01", "1998-07-31", ["1998-07-03", "1998-07-03", "1998-07-06"]),  # duplicates
+    ("1998-06-01", "1998-07-31", []),
+])
+@pytest.mark.parametrize("as_frame", [False, True])
+def test_calendar_matches_duckdb(spark, jobs_of, start, end, holidays, as_frame):
+    """The driver-built calendar equals the SQL calendar row for row,
+    from a holiday list (no Spark job) or a holiday DataFrame."""
+    if as_frame:
+        holidays = spark.createDataFrame([(h,) for h in holidays], "holiday_date string")
+    cal, jobs = jobs_of(lambda: build_calendar(spark, start, end, holidays))
+    if not as_frame:
+        assert jobs == []
+    want = _duckdb_calendar(start, end, [h[0] for h in holidays.collect()] if as_frame
+                            else holidays)
+    got = [tuple(r) for r in cal.orderBy("fulldate").collect()]
+    assert got == want
+    assert cal.columns == ["fulldate", "downum", "downame", "isbusday", "isholiday",
+                           "previous_business_date"]
+    assert want[0][-1] is None  # every case starts with no earlier workday

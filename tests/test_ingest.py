@@ -422,21 +422,7 @@ def test_empty_result_leaves_no_staging(spark, tmp_path):
     assert job.table.read().count() == 1
 
 
-def _jobs_of(spark, fn):
-    """(result, Spark job ids started by fn) under a fresh job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"ingest-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "ingest")
-    try:
-        out = fn()
-        return out, list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
-def test_run_file_starts_one_spark_job(spark, tmp_path):
+def test_run_file_starts_one_spark_job(spark, tmp_path, jobs_of):
     """A delivered file costs one Spark job, the write: the header is
     read on the driver, the gates ride the write, the target's columns
     come from its footers. An Empty file costs at most that job."""
@@ -453,7 +439,7 @@ def test_run_file_starts_one_spark_job(spark, tmp_path):
     }
     for name, (body, status, max_jobs) in files.items():
         (watch / name).write_text(body)
-        res, jobs = _jobs_of(spark, lambda: job.run_file(str(watch / name)))
+        res, jobs = jobs_of(lambda: job.run_file(str(watch / name)))
         assert res.status == status, name
         if status == "Active":
             assert len(jobs) == 1, name

@@ -1,7 +1,6 @@
 import datetime as dt
 import os
 import time
-import uuid
 
 import pyarrow.parquet as pq
 from pyspark.sql import Row
@@ -197,14 +196,11 @@ def test_datasets_types_match_schema(spark, tmp_path):
     assert reg.datasets().dtypes == [(f.name, f.dataType.simpleString()) for f in DATASET_SCHEMA]
 
 
-def test_legacy_spark_written_registry_is_updated(spark, tmp_path):
-    """A registry directory written by Spark (INT96 timestamps, a
-    ``_SUCCESS`` marker, ``.crc`` files, bigint lookup ids) is read,
-    updated and read back with FAR_FUTURE intact; 9999-01-01 overflows
-    nanosecond INT96 decoding, so this pins the microsecond read."""
-    reg = DatasetRegistry(spark, str(tmp_path / "registry"))
+def _write_legacy_registry(spark, reg, created):
+    """A registry directory as the earlier Spark writer left it: INT96
+    timestamps, a ``_SUCCESS`` marker, ``.crc`` files, bigint lookup
+    ids."""
     d = dt.date(2025, 3, 1)
-    created = dt.datetime(2025, 3, 1, 12, 30, 15, 123456)
     legacy = [
         Row(datasetid=1, datasetdate=d, label="evt", datasettypeid=1, datasourceid=1,
             datastatusid=STATUS_ID["Active"], efffromdate=created, effthrudate=FAR_FUTURE,
@@ -223,6 +219,17 @@ def test_legacy_spark_written_registry_is_updated(spark, tmp_path):
         )
     finally:
         spark.conf.set(key, before)
+
+
+def test_legacy_spark_written_registry_is_updated(spark, tmp_path):
+    """A registry directory written by Spark (INT96 timestamps, a
+    ``_SUCCESS`` marker, ``.crc`` files, bigint lookup ids) is read,
+    updated and read back with FAR_FUTURE intact; 9999-01-01 overflows
+    nanosecond INT96 decoding, so this pins the microsecond read."""
+    reg = DatasetRegistry(spark, str(tmp_path / "registry"))
+    d = dt.date(2025, 3, 1)
+    created = dt.datetime(2025, 3, 1, 12, 30, 15, 123456)
+    _write_legacy_registry(spark, reg, created)
     names = os.listdir(reg.path)
     assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
     part = next(n for n in names if n.endswith(".parquet"))
@@ -265,23 +272,38 @@ def test_timestamps_round_trip_in_local_time(spark, tmp_path, monkeypatch):
             time.tzset()
 
 
-def test_registry_writes_start_no_spark_jobs(spark, tmp_path):
+def test_registry_writes_start_no_spark_jobs(spark, tmp_path, jobs_of):
     """Registry writes are driver-side Arrow read-modify-writes: none of
-    them starts a Spark job. The job group is checked to be live by a
+    them starts a Spark job. The job count is checked to be live by a
     Spark read under it afterwards."""
-    sc = spark.sparkContext
     reg = DatasetRegistry(spark, str(tmp_path / "registry"))
-    group = f"registry-writes-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "registry writes")
-    try:
+
+    def writes():
         t = reg.ensure_type("T")
         src = reg.ensure_source("S")
         did = reg.register_snapshot(dt.date(2025, 3, 1), "evt", t, src, STATUS_ID["New"])
         reg.set_status(did, "Active")
         reg.register_snapshots([(dt.date(2025, 3, 2), "evt")], t, src)
         reg.set_status(did, "Inactive")
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-        assert reg.active().count() == 1
-        assert list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    assert jobs_of(writes)[1] == []
+    n, jobs = jobs_of(lambda: reg.active().count())
+    assert n == 1
+    assert jobs
+
+
+def test_registry_reads_use_the_declared_schema(spark, tmp_path, jobs_of):
+    """``datasets()`` and ``active()`` read with ``DATASET_SCHEMA``: the
+    schema Spark infers, for the INT96 legacy registry and for the
+    Arrow-written one, and no Spark job to build either frame."""
+    legacy = DatasetRegistry(spark, str(tmp_path / "legacy"))
+    _write_legacy_registry(spark, legacy, dt.datetime(2025, 3, 1, 12, 30))
+    arrow = DatasetRegistry(spark, str(tmp_path / "arrow"))
+    arrow.register_snapshot(dt.date(2025, 3, 1), "evt", arrow.ensure_type("T"))
+    for reg in (legacy, arrow):
+        inferred = spark.read.parquet(reg.path).schema
+        for read in (reg.datasets, reg.active):
+            df, jobs = jobs_of(read)
+            assert df.schema == inferred
+            assert jobs == []
+        assert reg.active().count() >= 1
