@@ -677,17 +677,16 @@ class IvfIndex(BatchStore):
         inverted lists partitioned by (batch, centroid) — the centroid
         directory is the probe unit, the batch directory the
         idempotent-ingest unit."""
-        import json
         import os
+
+        from etl_database_spark.commit import write_json
 
         lists = ivf_assign(df, centroids, id_col, vec_col).withColumn(
             "batch", F.lit(cls.BASE_BATCH)
         )
         lists.write.mode("overwrite").partitionBy("batch", "centroid").parquet(path)
-        with open(os.path.join(path, cls.CENTROIDS_FILE), "w") as fh:
-            json.dump(centroids, fh)
-        with open(os.path.join(path, cls.COMMITTED_FILE), "w") as fh:
-            json.dump([cls.BASE_BATCH], fh)
+        write_json(os.path.join(path, cls.CENTROIDS_FILE), centroids)
+        write_json(os.path.join(path, cls.COMMITTED_FILE), [cls.BASE_BATCH])
         return cls(spark, path, centroids)
 
     @classmethod
@@ -743,9 +742,8 @@ class IvfIndex(BatchStore):
     def compact(self, files_per_list: int = 1) -> None:
         """Rewrite all accumulated per-batch files into a consolidated
         ``batch=base`` layout with ``files_per_list`` files per
-        inverted list (BatchStore.compact handles manifests, sidecar
-        carry-over — including the centroids file — and the
-        write-to-sibling-and-swap)."""
+        inverted list (BatchStore.compact handles manifests and the
+        commit; the centroids file stays in place)."""
         self._files_per_list = files_per_list
         super().compact()
 

@@ -62,9 +62,10 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_database_spark import commit
 from etl_database_spark.maintenance import data_dirs, read_parquet
 from etl_database_spark.metadata import MetadataSpec, parse_date, parse_label
-from etl_database_spark.registry import STATUS_ID, DatasetRegistry, _tmp_path
+from etl_database_spark.registry import STATUS_ID, DatasetRegistry
 
 DEFAULT_WIDTH = 1000  # generic_import.py:328
 WIDTH_CAP = 4000  # generic_import.py:191
@@ -251,16 +252,22 @@ class TargetTable:
     When an ``audit`` log is attached, every schema-changing write is
     recorded (the reference's tddllogs event-trigger analog,
     setup_dba_maintenance.sql:82-120): table creation, strategy-1
-    column evolution, strategy-3 validation failure."""
+    column evolution, strategy-3 validation failure.
+
+    Opening a table rolls back an append or a compaction that was cut
+    off before its commit (``commit.recover``)."""
 
     def __init__(self, spark: SparkSession, root: str, name: str, audit=None):
         self.spark = spark
         self.name = name
         self.path = os.path.join(root, name)
         self.audit = audit
+        commit.recover(self.path)
 
     def exists(self) -> bool:
-        return os.path.exists(self.path)
+        """Whether the table holds anything: a rolled-back first append
+        can leave its directory behind, empty."""
+        return os.path.isdir(self.path) and bool(os.listdir(self.path))
 
     def read(self) -> DataFrame:
         """The table under the union of its files' schemas — a
@@ -290,14 +297,15 @@ class TargetTable:
         405-424). Returns the list of new columns added (strategy 1),
         or None when ``gate`` refused the write.
 
-        The frame is written into a staging directory beside the table
-        and committed only once ``gate`` (called after the write, so it
-        can read metrics observed on it) passes: a new table is the
-        renamed staging directory, an existing one takes each staged
-        ``datasetdate=…`` file. A strategy-3 violation is raised after
-        the gate, so the caller's Empty gates take precedence over it,
-        as in the reference. On any failure the staging directory is
-        removed and the table is left as it was.
+        The frame is written into a stage beside the table and
+        published (``commit.py``) only once ``gate`` (called after the
+        write, so it can read metrics observed on it) passes: a staged
+        ``datasetdate=…`` directory the table lacks moves in whole, and
+        the files of any other move into the table's directory, all in
+        one commit. A strategy-3 violation is raised after the gate, so
+        the caller's Empty gates take precedence over it, as in the
+        reference. On any failure the stage is removed and the table is
+        left as it was.
 
         Matching is case-insensitive on normalized names (the reference
         lowercases both sides, generic_import.py:405-414).
@@ -314,9 +322,8 @@ class TargetTable:
                 df = df.drop(*extra_in_file)
             elif strategy in (1, 3):
                 new_cols = extra_in_file
-        staged = _tmp_path(self.path)
-        try:
-            df.write.partitionBy("datasetdate").parquet(staged)
+        with commit.staged(self.path) as stage:
+            df.write.partitionBy("datasetdate").parquet(stage)
             if gate is not None and not gate():
                 return None
             if strategy == 3 and missing_in_file:
@@ -331,17 +338,17 @@ class TargetTable:
                 raise ValueError(
                     f"strategy 3: source file missing target columns {missing_in_file}"
                 )
-            if created:
-                os.rename(staged, self.path)
-            else:
-                for part in os.listdir(staged):
-                    src, dst = os.path.join(staged, part), os.path.join(self.path, part)
-                    if os.path.isdir(src):
-                        os.makedirs(dst, exist_ok=True)
-                        for f in os.listdir(src):
-                            os.rename(os.path.join(src, f), os.path.join(dst, f))
-        finally:
-            shutil.rmtree(staged, ignore_errors=True)
+            moves = []
+            for part in sorted(os.listdir(stage)):
+                src, dst = os.path.join(stage, part), os.path.join(self.path, part)
+                if not os.path.isdir(src):
+                    continue
+                if os.path.isdir(dst):
+                    moves += [(os.path.join(src, f), os.path.join(dst, f))
+                              for f in sorted(os.listdir(src))]
+                else:
+                    moves.append((src, dst))
+            commit.publish(self.path, moves)
         if self.audit is not None:
             from etl_database_spark.audit import ADD_COLUMN, CREATE_TABLE
 
@@ -355,16 +362,9 @@ class TargetTable:
         return new_cols
 
     def files_per_partition(self) -> dict[str, int]:
-        """Data-file count per partition directory (non-recursive data
-        layout: <path>/datasetdate=YYYY-MM-DD/part-*.parquet)."""
-        out: dict[str, int] = {}
-        if not self.exists():
-            return out
-        for entry in os.listdir(self.path):
-            pdir = os.path.join(self.path, entry)
-            if os.path.isdir(pdir) and "=" in entry:
-                out[entry] = sum(1 for f in os.listdir(pdir) if f.endswith(".parquet"))
-        return out
+        """Data-file count per partition directory, as ``compact_table``
+        counts them (<path>/datasetdate=YYYY-MM-DD/part-*.parquet)."""
+        return {os.path.relpath(d, self.path): len(fs) for d, fs in data_dirs(self.path)}
 
     def maybe_compact(self, max_files_per_partition: int, target_files: int | None = None) -> bool:
         """Compact when any partition exceeds the file-count gate —
@@ -494,14 +494,7 @@ class ImportJob:
         return persisted | merged
 
     def _persist_widths(self, widths: dict[str, int]) -> None:
-        import json
-
-        path = self._widths_path()
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(widths, f)
-        os.replace(tmp, path)
+        commit.write_json(self._widths_path(), widths)
 
     def run_file(self, path: str) -> ImportResult:
         try:

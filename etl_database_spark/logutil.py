@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_database_spark import commit
+
 LOG_SCHEMA = T.StructType(
     [
         T.StructField("logid", T.StringType(), False),
@@ -85,6 +87,7 @@ class RunLogger:
 
 
 def read_logs(spark: SparkSession, path: str) -> DataFrame:
+    commit.recover(path)
     if os.path.exists(path):
         return spark.read.parquet(path)
     return spark.createDataFrame([], LOG_SCHEMA)
@@ -92,15 +95,14 @@ def read_logs(spark: SparkSession, path: str) -> DataFrame:
 
 def purge_old_logs(spark: SparkSession, path: str, keep_days: int) -> int:
     """Retention delete: keep only rows newer than the threshold
-    (log_cleanup.sql:10-91 → filter + atomic rewrite). Returns rows
-    removed."""
-    from etl_database_spark.registry import _atomic_overwrite
-
+    (log_cleanup.sql:10-91 → filter + a rewrite published through
+    ``commit``). Returns rows removed."""
     df = read_logs(spark, path)
     cutoff = dt.datetime.now() - dt.timedelta(days=keep_days)
     before = df.count()
     kept = df.where(F.col("timestamp") >= F.lit(cutoff))
     n_kept = kept.count()
     if n_kept < before:
-        _atomic_overwrite(kept, path)
+        with commit.replacing(path) as new:
+            kept.write.parquet(new)
     return before - n_kept

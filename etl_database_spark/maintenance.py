@@ -20,7 +20,6 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-import shutil
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -30,7 +29,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_type
 
-from etl_database_spark.registry import _swap_in, _tmp_path
+from etl_database_spark import commit
 
 # Footer key under which Spark stores the schema it wrote.
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -128,25 +127,27 @@ def compact_table(spark: SparkSession, path: str, target_files: int = 8) -> int:
     more than ``target_files`` data files into at most that many (an
     unpartitioned table is one partition); returns the table's file
     count before compaction. Each partition keeps its own schema —
-    readers union by name — and is written beside the table, then
-    swapped in, so a partition is never half-written. Partitions at or
-    under the target are not touched, so the cost of a compaction
-    follows what was appended since the last one, not the table size."""
+    readers union by name — and is written into a stage beside the
+    table; all are swapped in by one commit (``commit.py``), the replaced
+    data moving into the stage. Partitions at or under the target are
+    not touched, so the cost of a compaction follows what was appended
+    since the last one, not the table size."""
+    commit.recover(path)
     before = sum(len(files) for _, _, files in os.walk(path))
-    staging = _tmp_path(path)
-    try:
+    with commit.staged(path) as stage:
+        moves = []
         for pdir, files in list(data_dirs(path)):
             if len(files) <= target_files:
                 continue
-            tmp = os.path.normpath(os.path.join(staging, os.path.relpath(pdir, path)))
+            rel = os.path.relpath(pdir, path)
+            new = os.path.normpath(os.path.join(stage, "new", rel))
             (
                 spark.read.schema(footer_schema(spark, files)).parquet(pdir)
                 .coalesce(target_files)
-                .write.parquet(tmp)
+                .write.parquet(new)
             )
-            _swap_in(tmp, pdir)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+            moves += [(pdir, os.path.normpath(os.path.join(stage, "old", rel))), (new, pdir)]
+        commit.publish(path, moves)
     return before
 
 
@@ -159,7 +160,7 @@ def table_stats_snapshot(
     rows = []
     for name in sorted(os.listdir(data_root)) if os.path.isdir(data_root) else []:
         tpath = os.path.join(data_root, name)
-        if not os.path.isdir(tpath) or ".tmp." in name or ".old." in name:
+        if not os.path.isdir(tpath) or name.startswith((".", "_")):
             continue
         n_bytes = 0
         n_files = 0

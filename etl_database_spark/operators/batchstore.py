@@ -22,12 +22,11 @@ The contract, shared verbatim by every store:
   by their measure's algebra (additive counts/signs, bitwise OR,
   sketch merges).
 - **LSM-style compaction**: fold everything into ``batch=base``,
-  record absorbed ids (late replays stay no-ops), write to a sibling
-  temp dir and atomically swap. If the swap's second rename fails the
-  original directory is renamed back, so the store path is only absent
-  during a hard process kill between the two renames — in that case
-  the data is intact in the ``<path>__old_*`` sibling: rename it back
-  to recover.
+  record absorbed ids (late replays stay no-ops), write the fold into a
+  stage beside the store and publish it through the engine's commit
+  protocol (``commit.py``). A failed publish is rolled back in process,
+  so the store stays serveable; one cut off by a process kill is rolled
+  back when the store is next opened.
 - **retraction bookkeeping** (stores whose algebra supports negation):
   retracted batch ids are recorded in a sidecar for audit.
 
@@ -45,11 +44,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from etl_database_spark import commit
 
 
 class BatchStore:
@@ -61,12 +60,11 @@ class BatchStore:
     CONFIG_FILE: str | None = None
     #: extra partition columns AFTER "batch" in the main ingest write
     PARTITION_COLS: tuple = ()
-    #: underscore-subdirs carried verbatim across a compaction swap
-    COMPACT_COPY_DIRS: tuple = ()
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        commit.recover(path)  # a compaction cut off before its commit
 
     # -- config identity ----------------------------------------------------
 
@@ -159,46 +157,32 @@ class BatchStore:
 
     def _compact_fold(self, tmp: str) -> None:
         """Subclass: write the folded ``batch=base`` state into the
-        sibling temp directory ``tmp`` (main data plus any sketch
-        subdirs)."""
+        stage directory ``tmp`` (main data plus any sketch subdirs)."""
         raise NotImplementedError
 
     def compact(self) -> None:
         """Fold every batch into ``batch=base`` (the subclass's
         algebra — retraction negatives cancel here) and record absorbed
-        ids so late replays stay no-ops. Write-to-sibling-and-swap,
-        never half-rewritten in place; a failed swap restores the
-        original directory."""
+        ids so late replays stay no-ops. The fold is written into a
+        stage and published in one commit: every ``batch=*`` directory
+        and every entry the fold wrote moves out of the store, the
+        fold's entries move in. Sidecars and subdirectories the fold
+        leaves alone (config, retraction log, stream bindings, raw
+        slices) stay where they are."""
         absorbed = sorted(set(self.batches()) | set(self._compacted()))
-        tmp = f"{self.path}__compact_{uuid.uuid4().hex[:8]}"
-        self._compact_fold(tmp)
-        with open(os.path.join(tmp, self.COMPACTED_FILE), "w") as fh:
-            json.dump([b for b in absorbed if b != self.BASE_BATCH], fh)
-        with open(os.path.join(tmp, self.COMMITTED_FILE), "w") as fh:
-            json.dump([self.BASE_BATCH], fh)
-        for name in self.COMPACT_COPY_DIRS:
-            src = os.path.join(self.path, name)
-            if os.path.isdir(src) and not os.path.isdir(os.path.join(tmp, name)):
-                shutil.copytree(src, os.path.join(tmp, name))
-        # carry sidecar markers (config, retraction log, streaming
-        # checkpoint bindings) across the swap — a compaction must not
-        # unbind the store
-        for name in os.listdir(self.path):
-            src = os.path.join(self.path, name)
-            if (
-                name.startswith("_")
-                and name not in (self.COMPACTED_FILE, self.COMMITTED_FILE)
-                and os.path.isfile(src)
-            ):
-                shutil.copy2(src, os.path.join(tmp, name))
-        old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(self.path, old)
-        try:
-            os.rename(tmp, self.path)
-        except OSError:
-            os.rename(old, self.path)  # restore — the store stays serveable
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+        with commit.staged(self.path) as stage:
+            new, old = os.path.join(stage, "new"), os.path.join(stage, "old")
+            self._compact_fold(new)
+            commit.write_json(os.path.join(new, self.COMPACTED_FILE),
+                              [b for b in absorbed if b != self.BASE_BATCH])
+            commit.write_json(os.path.join(new, self.COMMITTED_FILE), [self.BASE_BATCH])
+            names = sorted(set(os.listdir(new)) | {
+                n for n in os.listdir(self.path) if n.startswith("batch=")})
+            moves = [(os.path.join(self.path, n), os.path.join(old, n))
+                     for n in names if os.path.lexists(os.path.join(self.path, n))]
+            moves += [(os.path.join(new, n), os.path.join(self.path, n))
+                      for n in sorted(os.listdir(new))]
+            commit.publish(self.path, moves)
 
     # -- sidecar io ---------------------------------------------------------
 
@@ -210,10 +194,7 @@ class BatchStore:
             return json.load(fh)
 
     def _write_raw(self, name: str, value) -> None:
-        tmp = os.path.join(self.path, f".{name}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(value, fh)
-        os.replace(tmp, os.path.join(self.path, name))
+        commit.write_json(os.path.join(self.path, name), value)
 
     def _write_json(self, name: str, values: list[str]) -> None:
         self._write_raw(name, sorted(values))

@@ -31,12 +31,11 @@ unioned pool (1e-9), and selection ranks identically.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_database_spark import commit
 from etl_database_spark.functions.dsir import (
     DSIR_BUCKETS_DEFAULT,
     _bucket_log_probs,
@@ -49,7 +48,6 @@ from etl_database_spark.operators.batchstore import BatchStore
 class DsirStore(BatchStore):
     CONFIG_FILE = "_dsir_meta.json"
     TARGET_SUBDIR = "_target"
-    COMPACT_COPY_DIRS = (TARGET_SUBDIR,)
 
     def __init__(
         self,
@@ -61,6 +59,7 @@ class DsirStore(BatchStore):
         super().__init__(spark, path)
         self.n_buckets = n_buckets
         self.portable_hash = portable_hash
+        commit.recover(os.path.join(path, self.TARGET_SUBDIR))
         self._check_config()
 
     def _config(self) -> dict:
@@ -81,19 +80,15 @@ class DsirStore(BatchStore):
     ) -> None:
         """Fix (or replace) the target corpus LM: per-bucket counts,
         n_buckets rows. Replacing the target only changes the ratio
-        table — stored raw features stay valid."""
-        os.makedirs(self.path, exist_ok=True)
+        table — stored raw features stay valid. The new target is
+        published in place of the old one (``commit.py``)."""
         counts = (
             _doc_features(target, text_col, id_col, self.n_buckets, self.portable_hash)
             .groupBy("bucket")
             .agg(F.sum("cnt").cast("long").alias("c"))
         )
-        tmp = os.path.join(self.path, f".target_{uuid.uuid4().hex[:8]}")
-        counts.coalesce(1).write.mode("overwrite").parquet(tmp)
-        final = os.path.join(self.path, self.TARGET_SUBDIR)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        with commit.replacing(os.path.join(self.path, self.TARGET_SUBDIR)) as new:
+            counts.coalesce(1).write.parquet(new)
         self._write_raw(self.CONFIG_FILE, self._config())
 
     # -- write path ------------------------------------------------------

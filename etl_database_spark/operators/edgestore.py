@@ -650,8 +650,7 @@ class EdgeStore(BatchStore):
             .withColumn("batch", F.lit(self.BASE_BATCH))
         )
         # preserve the store's pinned physical layout across compaction
-        # (the sidecar itself rides the underscore-file carry in
-        # BatchStore.compact)
+        # (the sidecar itself stays in place)
         buckets = self._band_layout()
         band_parts = ["batch"]
         if buckets > 0:

@@ -64,8 +64,7 @@ class RollupStore(BatchStore):
     TDIGEST_SUBDIR = "_tdigest"
     RAW_SUBDIR = "_raw"
     # the raw slice is NOT folded — per-batch raw partitions are what
-    # retract_batch subtracts by; carried verbatim across compaction
-    COMPACT_COPY_DIRS = (RAW_SUBDIR,)
+    # retract_batch subtracts by; compaction leaves them in place
 
     def __init__(
         self,
@@ -527,8 +526,8 @@ class RollupStore(BatchStore):
         """Fold all per-batch partials into one ``batch=base`` row per
         (day, event_type), bounding merge-on-read fan-in — plus every
         configured sketch subdir, each folded by its own merge algebra.
-        The raw slice (retract_batch's recompute source) is carried
-        verbatim via COMPACT_COPY_DIRS."""
+        The raw slice (retract_batch's recompute source) is left in
+        place."""
         folded = (
             self.partials()
             .groupBy("day", "event_type")

@@ -17,8 +17,10 @@ invariant (onboarding/sql/dataset_setup.sql):
 Every registry write is one driver-side read-modify-write with
 pyarrow and starts no Spark job: read the registry table, apply the
 change, re-derive the invariant over the active rows with one
-group-by-key pass (SURVEY.md W2), write one Parquet file into a temp
-directory and swap it in, so readers never see a half-written registry.
+group-by-key pass (SURVEY.md W2), and publish one Parquet file in place
+of the table through the engine's commit protocol (``commit.py``), so
+readers never see a half-written registry and a write cut off between
+its renames is rolled back when the registry is next read.
 The table is a few hundred rows, so a Spark job per step (an aggregate
 for ``max(datasetid)``, a window shuffle, a ``coalesce(1)`` write)
 would cost far more than the work itself. Reads stay Spark:
@@ -47,8 +49,6 @@ from __future__ import annotations
 import datetime as dt
 import getpass
 import os
-import shutil
-import uuid
 
 import pyarrow as pa
 import pyarrow.dataset as pads
@@ -56,6 +56,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from etl_database_spark import commit
 
 FAR_FUTURE = dt.datetime(9999, 1, 1)
 
@@ -166,6 +168,7 @@ class DatasetRegistry:
 
     # -- dataset rows ----------------------------------------------------
     def datasets(self) -> DataFrame:
+        commit.recover(self.path)
         if os.path.exists(self.path):
             return self.spark.read.schema(DATASET_SCHEMA).parquet(self.path)
         return self.spark.createDataFrame([], DATASET_SCHEMA)
@@ -321,7 +324,8 @@ def _read_arrow(path: str, schema: pa.Schema, limit: int | None = None) -> pa.Ta
     also reinterprets the INT96 timestamps of Spark-written files as
     the UTC instants they hold); empty when ``path`` does not exist.
     Spark's ``_SUCCESS`` and ``.crc`` files are skipped by their
-    prefixes."""
+    prefixes. An unfinished write of ``path`` is rolled back first."""
+    commit.recover(path)
     if not os.path.exists(path):
         return schema.empty_table()
     data = pads.dataset(path, format=_PARQUET)
@@ -330,32 +334,9 @@ def _read_arrow(path: str, schema: pa.Schema, limit: int | None = None) -> pa.Ta
 
 
 def _write_arrow(table: pa.Table, path: str) -> None:
-    """One part file into a temp dir, swapped in for ``path``. No Arrow
-    schema in the footer: Spark reads the Parquet schema alone, and the
-    file stays the size Spark's own writer would make it."""
-    tmp = _tmp_path(path)
-    os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"), store_schema=False)
-    _swap_in(tmp, path)
-
-
-def _atomic_overwrite(df: DataFrame, path: str) -> None:
-    """Spark-write ``df`` to a temp dir, then swap it in for ``path``."""
-    tmp = _tmp_path(path)
-    df.write.mode("overwrite").parquet(tmp)
-    _swap_in(tmp, path)
-
-
-def _tmp_path(path: str) -> str:
-    return f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-
-
-def _swap_in(tmp: str, path: str) -> None:
-    """Replace ``path`` by the fully written directory ``tmp`` — readers
-    never see a half-written table (Parquet has no transactions; the
-    registry is the one place we need read-modify-write)."""
-    old = f"{path}.old.{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    """One part file published in place of ``path``. No Arrow schema in
+    the footer: Spark reads the Parquet schema alone, and the file stays
+    the size Spark's own writer would make it."""
+    with commit.replacing(path) as new:
+        os.makedirs(new)
+        pq.write_table(table, os.path.join(new, "part-00000.parquet"), store_schema=False)

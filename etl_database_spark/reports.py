@@ -16,7 +16,6 @@ tests (and headless environments) don't need a mail server.
 
 from __future__ import annotations
 
-import io
 import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -65,27 +64,32 @@ def render_report(spark: SparkSession, cfg: ReportConfig, max_rows: int = 10000)
     body = re.sub(
         r"\{\{[^}]+\}\}", lambda m: m.group(0) if m.group(0) in known else "", body
     )
+    # One collected frame per distinct SQL text: a query shown in the
+    # body and as an attachment runs once per render.
+    frames: dict[str, object] = {}
+    for sql in [*cfg.body_queries.values(), *(s["query"] for s in cfg.attachment_queries)]:
+        if sql not in frames:
+            try:
+                frames[sql] = spark.sql(sql).limit(max_rows).toPandas()
+            except Exception as e:  # noqa: BLE001 — reports degrade, never crash
+                frames[sql] = e
     errors: dict[str, str] = {}
     for placeholder, sql in cfg.body_queries.items():
-        slot = "{{" + placeholder + "}}"
-        try:
-            pdf = spark.sql(sql).limit(max_rows).toPandas()
+        pdf = frames[sql]
+        if isinstance(pdf, Exception):
+            html = f"<p>Error in query '{placeholder}': {pdf}</p>"
+            errors[placeholder] = str(pdf)
+        else:
             html = pdf.to_html(index=False, border=1, classes="report-grid")
-        except Exception as e:  # noqa: BLE001 — reports degrade, never crash
-            html = f"<p>Error in query '{placeholder}': {e}</p>"
-            errors[placeholder] = str(e)
-        body = body.replace(slot, html)
+        body = body.replace("{{" + placeholder + "}}", html)
 
     attachments: dict[str, str] = {}
     for spec in cfg.attachment_queries:
-        name, sql = spec["name"], spec["query"]
-        try:
-            pdf = spark.sql(sql).limit(max_rows).toPandas()
-            buf = io.StringIO()
-            pdf.to_csv(buf, index=False)
-            attachments[f"{name}.csv"] = buf.getvalue()
-        except Exception as e:  # noqa: BLE001
-            errors[name] = str(e)
+        pdf = frames[spec["query"]]
+        if isinstance(pdf, Exception):
+            errors[spec["name"]] = str(pdf)
+        else:
+            attachments[f"{spec['name']}.csv"] = pdf.to_csv(index=False)
     return RenderedReport(
         cfg.report_id, cfg.subject, cfg.recipients, body, attachments, errors
     )

@@ -340,23 +340,22 @@ def test_config_identity(spark, tmp_path, harness):
 
 
 def test_compact_swap_failure_restores_store(spark, tmp_path, monkeypatch):
-    """If the second rename of the compaction swap fails, the original
-    directory is renamed back — the store stays serveable (ADVICE r8:
-    previously the path was left absent)."""
+    """If a rename of the compacted data into the store fails, the
+    publish is rolled back in process — the same store object stays
+    serveable and no stage or journal is left (ADVICE r8: previously
+    the path was left absent)."""
     path = str(tmp_path / "store")
     store = SpanStore(spark, path, w=4)
     store.ingest(_docs(spark, 0, 10), "b0")
     before = sorted(map(tuple, store.counts().collect()))
 
     real_rename = os.rename
-    calls = {"n": 0}
 
     def failing_rename(src, dst):
-        # BatchStore.compact's swap: rename(path→old) then rename(tmp→path)
-        if src.startswith(path) and "__compact_" not in src:
-            calls["n"] += 1
-            return real_rename(src, dst)
-        if "__compact_" in src:
+        # BatchStore.compact's publish moves the store's entries into
+        # <stage>/old, then the fold's from <stage>/new into the store;
+        # the stage is .store.stage-<hex>
+        if ".store.stage-" in src and f"{os.sep}new{os.sep}" in src:
             raise OSError("injected swap failure")
         return real_rename(src, dst)
 
@@ -366,3 +365,5 @@ def test_compact_swap_failure_restores_store(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     assert os.path.isdir(path)
     assert sorted(map(tuple, store.counts().collect())) == before
+    assert store.batches() == ["b0"]
+    assert sorted(os.listdir(tmp_path)) == ["store"]

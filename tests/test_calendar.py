@@ -4,12 +4,7 @@ import duckdb
 import pytest
 
 from etl_database_spark.calendar import asof_business_day, build_calendar, next_business_date
-from etl_database_spark.queries import load_all
-
-# Importing a query module before load_all() would change the
-# registry's order, and with it the driver window other tests check.
-load_all()
-from etl_database_spark.queries.relational import HOLIDAYS  # noqa: E402
+from etl_database_spark.queries.relational import HOLIDAYS
 
 
 def test_calendar_shape_and_dow(spark):

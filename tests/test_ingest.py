@@ -472,4 +472,6 @@ def test_compaction_rewrites_only_crowded_partitions(spark, tmp_path):
     assert sorted(tuple(r) for r in out.select("x", "y").collect()) == sorted(
         [("a", None)] + [(str(i), f"y{i}") for i in range(6)]
     )
-    assert not [d for d in os.listdir(tmp_path) if ".tmp." in d or ".old." in d]
+    # no stage (.t.stage-<hex>, which took the replaced files) and no
+    # journal (.t.commit) is left beside the table
+    assert sorted(os.listdir(tmp_path)) == ["t"]

@@ -51,3 +51,20 @@ def test_process_reports_filters_and_sends(spark):
     assert len(sent) == 1
     out2 = process_reports(spark, configs, report_id=2)
     assert [r.report_id for r in out2] == [2]
+
+
+def test_repeated_sql_runs_once_per_render(spark, jobs_of):
+    """A SQL text in two body slots and an attachment is executed once;
+    the grid and the CSV are rendered from the one collected frame."""
+    spark.range(40).selectExpr("id % 4 AS k").createOrReplaceTempView("r")
+    sql = "SELECT k, count(*) AS n FROM r GROUP BY k ORDER BY k"
+    once = _cfg(body_template="{{a}}", body_queries={"a": sql}, attachment_queries=[])
+    thrice = _cfg(body_template="{{a}}<hr>{{b}}", body_queries={"a": sql, "b": sql},
+                  attachment_queries=[{"name": "k", "query": sql}])
+    render_report(spark, once)  # warm: plan caches, first-run jobs
+    single, jobs_single = jobs_of(lambda: render_report(spark, once))
+    out, jobs = jobs_of(lambda: render_report(spark, thrice))
+    assert len(jobs_single) >= 1 and len(jobs) == len(jobs_single)
+    assert out.html_body == single.html_body + "<hr>" + single.html_body
+    assert out.attachments["k.csv"] == "k,n\n0,10\n1,10\n2,10\n3,10\n"
+    assert not out.errors
