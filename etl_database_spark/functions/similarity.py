@@ -641,11 +641,11 @@ class IvfIndex(BatchStore):
     Maintenance (the served-index lifecycle at scale):
 
     - :meth:`append` ingests a new vector batch against the FIXED
-      centroids. The batch id is the first-level partition key and the
-      write is dynamic-partition-overwrite, so replaying a batch
-      (retry, restarted pipeline) replaces its own partitions instead
-      of duplicating rows — the same idempotence contract as the
-      streaming signature/embedding stores.
+      centroids. The batch id is the first-level partition key and
+      the manifest is the commit point: replaying a committed batch
+      (retry, restarted pipeline) is a no-op instead of duplicating
+      rows, and an uncommitted batch's directories are never read and
+      are removed when the next batch is written.
     - :meth:`merge_from` folds another index in by re-reading its
       lists as vectors and appending (reassignment to THIS index's
       centroids happens in the append path, so differing quantizers
@@ -699,7 +699,7 @@ class IvfIndex(BatchStore):
         return cls(spark, path, centroids)
 
     def lists(self, probed: list[int] | None = None) -> DataFrame:
-        df = self.spark.read.parquet(self.path)
+        df = self._read()
         if probed is not None:
             df = df.where(F.col("centroid").isin([int(c) for c in probed]))
         return df
@@ -717,13 +717,9 @@ class IvfIndex(BatchStore):
         centroids. Returns False (no write) if the batch id was already
         ingested — live or absorbed by a compaction — so pipeline
         replays are safe. The write is dynamic-partition-overwrite
-        scoped to ``batch=<id>/centroid=*``: a crash mid-write leaves a
-        partial batch that the retry fully replaces."""
-        # _begin_batch also seeds the manifest for pre-manifest stores
-        # from the directory listing BEFORE writing — otherwise _commit
-        # would union against an empty list, dropping legacy batch dirs
-        # from the committed set, and a later compact() would omit them
-        # from absorbed-ids (late replays would duplicate vectors).
+        scoped to ``batch=<id>/centroid=*``. The manifest is the
+        commit point; an uncommitted batch's directories are never
+        read and are removed when the next batch is written."""
         if not self._begin_batch(batch):
             return False
         self._write_batch(ivf_assign(df, self.centroids, id_col, vec_col), batch)

@@ -11,9 +11,14 @@ The contract, shared verbatim by every store:
 
 - **batch-keyed idempotent ingest**: data lands partitioned by
   ``batch=<id>`` via dynamic-partition-overwrite; the manifest entry is
-  written only AFTER the parquet write completes, so a crash mid-write
-  leaves a partial directory that the retry fully replaces, and a
-  replay of a committed (or compacted-away) batch id is a no-op.
+  written only AFTER the parquet write completes. The manifest is the
+  commit point: every read (:meth:`_read`) sees only committed
+  batches, so a batch another session is still writing or a crashed
+  one left behind is never served, and an uncommitted batch's
+  directories are removed when the next batch is written (opening a
+  store removes nothing: a reader cannot tell a crashed write from one
+  in flight). A replay of a committed (or compacted-away) batch id is
+  a no-op.
 - **config identity**: parameters that change row meaning (window
   width, bit count, bucket count…) are persisted on first write and a
   reopen with different values raises instead of silently merging
@@ -28,7 +33,8 @@ The contract, shared verbatim by every store:
   so the store stays serveable; one cut off by a process kill is rolled
   back when the store is next opened.
 - **retraction bookkeeping** (stores whose algebra supports negation):
-  retracted batch ids are recorded in a sidecar for audit.
+  retracted batch ids are recorded in a sidecar for audit, before the
+  manifest commit; only committed ids are listed.
 
 Crash-partial heal, idempotent replay, and compaction identity are
 property-tested once for every registered store in
@@ -44,6 +50,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +73,8 @@ class BatchStore:
         self.spark = spark
         self.path = path
         commit.recover(path)  # a compaction cut off before its commit
+        #: the batch this object is writing: read back before its commit
+        self._writing: str | None = None
 
     # -- config identity ----------------------------------------------------
 
@@ -87,41 +97,30 @@ class BatchStore:
             return
         stored = self._read_json(self.CONFIG_FILE)
         current = self._config()
-        if stored is not None:
-            stored = self._upgrade_stored_config(dict(stored))
-            if stored != current:
-                raise ValueError(self._config_mismatch(stored, current))
-
-    def _upgrade_stored_config(self, stored: dict) -> dict:
-        """Subclass hook: default config keys that were added AFTER
-        stores of this kind first persisted to disk, so pre-existing
-        stores keep opening instead of failing the identity check on a
-        key they could not have written."""
-        return stored
+        if stored is not None and stored != current:
+            raise ValueError(self._config_mismatch(stored, current))
 
     # -- write path ---------------------------------------------------------
 
     def _begin_batch(self, batch: str) -> bool:
         """Idempotence guard + first-write bootstrap. Returns False if
         the batch id is reserved or already ingested (live or absorbed
-        by a compaction); otherwise ensures the directory, seeds the
-        committed manifest (pre-manifest stores: from the directory
-        listing, BEFORE writing, so compaction later absorbs legacy
-        batches correctly), persists the config identity, and returns
-        True."""
+        by a compaction); otherwise ensures the directory, sweeps
+        uncommitted batches (a crashed attempt of this one included),
+        persists the config identity, and returns True."""
         if batch == self.BASE_BATCH or batch in self.batches():
             return False
         os.makedirs(self.path, exist_ok=True)
-        if self._read_json(self.COMMITTED_FILE) is None:
-            self._write_json(self.COMMITTED_FILE, self.batches())
+        self._sweep()
+        self._writing = batch
         if self.CONFIG_FILE is not None and self._read_json(self.CONFIG_FILE) is None:
             self._write_raw(self.CONFIG_FILE, self._config())
         return True
 
-    def _write_batch(self, df: DataFrame, batch: str, commit: bool = True) -> None:
+    def _write_batch(self, df: DataFrame, batch: str, retraction: bool = False) -> None:
         """The standard partitioned batch write: tag rows with the
-        batch id, dynamic-partition-overwrite (a retried crash partial
-        is fully replaced), manifest commit only after the write."""
+        batch id, dynamic-partition-overwrite, manifest commit only
+        after the write."""
         (
             df.withColumn("batch", F.lit(batch))
             .write.mode("overwrite")
@@ -129,31 +128,76 @@ class BatchStore:
             .partitionBy("batch", *self.PARTITION_COLS)
             .parquet(self.path)
         )
-        if commit:
-            self._commit(batch)
-
-    def _record_retraction(self, batch: str) -> None:
-        self._write_json(self.RETRACTED_FILE, sorted(set(self.retractions()) | {batch}))
+        self._commit(batch, retraction)
 
     def retractions(self) -> list[str]:
-        return self._read_json(self.RETRACTED_FILE) or []
+        """Committed retraction batch ids: a recorded id whose manifest
+        commit never happened was swept, so it is not listed."""
+        live = set(self.batches())
+        return [b for b in self._read_json(self.RETRACTED_FILE) or [] if b in live]
 
     # -- maintenance --------------------------------------------------------
 
     def batches(self) -> list[str]:
         """Ingested batch ids: the committed manifest plus batches
-        absorbed by a compaction. Falls back to directory listing for
-        stores written before the manifest existed — for those, a
-        partial directory counts as ingested (the pre-manifest
-        behavior), which is why new writes always commit."""
-        committed = self._read_json(self.COMMITTED_FILE)
-        if committed is None:
-            committed = [
-                d.split("=", 1)[1]
-                for d in (os.listdir(self.path) if os.path.isdir(self.path) else [])
-                if d.startswith("batch=") and os.path.isdir(os.path.join(self.path, d))
-            ]
+        absorbed by a compaction."""
+        committed = self._read_json(self.COMMITTED_FILE) or []
         return sorted(set(committed) | set(self._compacted()))
+
+    def _live(self) -> set[str]:
+        """Batch ids a read may see: committed, absorbed, ``base``, and
+        the batch this object is writing."""
+        return set(self.batches()) | {self.BASE_BATCH, self._writing}
+
+    @staticmethod
+    def _batch_dirs(root: str) -> dict[str, str]:
+        """``{batch id: directory}`` for the ``batch=<id>`` directories
+        of one root. Spark escapes some characters of a partition value
+        in its directory name (``:`` is written ``%3A``), so the id is
+        the unescaped name."""
+        if not os.path.isdir(root):
+            return {}
+        return {unquote(e.split("=", 1)[1]): os.path.join(root, e)
+                for e in os.listdir(root) if e.startswith("batch=")}
+
+    def _read(self, subdir: str = "") -> DataFrame:
+        """One root of the store (the main rows, or a ``_``-prefixed
+        row-kind root) as committed: an uncommitted batch's directories
+        are left out of the scan. With none present the root is read
+        whole, so the scan is the plain directory read."""
+        root = os.path.join(self.path, subdir)
+        dirs = self._batch_dirs(root)
+        live = self._live()
+        if set(dirs) <= live:
+            return self.spark.read.parquet(root)
+        return self.spark.read.option("basePath", root).parquet(
+            *sorted(d for b, d in dirs.items() if b in live))
+
+    def _sweep(self) -> None:
+        """Remove every ``batch=<id>`` directory whose id is not
+        committed, absorbed or ``base``, and Spark's write debris
+        (``_temporary``, ``.spark-staging-*``), from the store root and
+        each ``_``-prefixed row-kind root; a row-kind root left empty
+        goes too. Runs only on the write path, where one writer holds
+        the store: a write cut off before its manifest commit is gone
+        before the next batch lands."""
+        if not os.path.isdir(self.path):
+            return
+        keep = set(self.batches()) | {self.BASE_BATCH}
+        roots = [self.path] + [
+            os.path.join(self.path, d) for d in sorted(os.listdir(self.path))
+            if d.startswith("_") and d != "_temporary"
+            and os.path.isdir(os.path.join(self.path, d))
+        ]
+        for root in roots:
+            for b, d in self._batch_dirs(root).items():
+                if b not in keep:
+                    shutil.rmtree(d)
+            for entry in os.listdir(root):
+                if entry == "_temporary" or entry.startswith(".spark-staging-"):
+                    shutil.rmtree(os.path.join(root, entry))
+            if root != self.path and not os.listdir(root):
+                os.rmdir(root)
 
     def _compact_fold(self, tmp: str) -> None:
         """Subclass: write the folded ``batch=base`` state into the
@@ -199,9 +243,17 @@ class BatchStore:
     def _write_json(self, name: str, values: list[str]) -> None:
         self._write_raw(name, sorted(values))
 
-    def _commit(self, batch: str) -> None:
+    def _commit(self, batch: str, retraction: bool = False) -> None:
+        """Add ``batch`` to the manifest — the commit point. A
+        retraction is recorded first, so a kill in between leaves an
+        uncommitted (swept, unlisted) batch, never a committed
+        retraction missing from the record."""
+        if retraction:
+            self._write_json(self.RETRACTED_FILE,
+                             set(self._read_json(self.RETRACTED_FILE) or []) | {batch})
         committed = self._read_json(self.COMMITTED_FILE) or []
-        self._write_json(self.COMMITTED_FILE, sorted(set(committed) | {batch}))
+        self._write_json(self.COMMITTED_FILE, set(committed) | {batch})
+        self._writing = None
 
     def _compacted(self) -> list[str]:
         return self._read_json(self.COMPACTED_FILE) or []

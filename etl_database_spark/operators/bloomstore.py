@@ -61,7 +61,7 @@ class BloomStore(BatchStore):
         (and replays of compacted batches) return False and write
         nothing. Crash-safe: the manifest entry is written only after
         the parquet write completes; a crashed partial directory is
-        fully replaced by the retry's dynamic-partition-overwrite."""
+        swept on the next open or batch write."""
         if not self._begin_batch(batch):
             return False
         self._write_batch(B.bloom_partials(df, key_col, self.m_bits), batch)
@@ -71,7 +71,7 @@ class BloomStore(BatchStore):
 
     def serve(self) -> DataFrame:
         """The merged filter: OR per word across all batches."""
-        return B.bloom_merge(self.spark.read.parquet(self.path).select("word", "bits"))
+        return B.bloom_merge(self._read().select("word", "bits"))
 
     def might_contain(
         self, probes: DataFrame, key_col: str, id_cols: list[str], out_col: str = "bloom_hit"

@@ -111,7 +111,7 @@ class DsirStore(BatchStore):
     # -- read path -------------------------------------------------------
 
     def features(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return self._read()
 
     def serve_weights(self, id_col: str = "doc_id") -> DataFrame:
         """Current (id, n_grams, log_weight) for every stored document,

@@ -41,10 +41,6 @@ FOUR signed row kinds:
   appends only the verified new edges. Old–old pairs are never
   re-verified.
 
-Stores persisted before the band/count row kinds existed are migrated
-by a one-time backfill (band the merged signature table into
-``batch=base``) on the next ingest/retract/compact.
-
 Both kinds merge by sign-sum (> 0 ⇒ present), so :meth:`retract`
 removes a set of documents EXACTLY — their signature rows and every
 incident edge get negated rows — and a later re-ingest of the same
@@ -75,7 +71,6 @@ No counterpart in the reference repo (training-data extension).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -123,9 +118,10 @@ class EdgeStore(BatchStore):
         of the band table instead of all of it, and at 100 TB the
         bucket count rises with the store so day-batches prune too.
         The layout in force is pinned per store by a sidecar at first
-        band write; stores persisted before the sidecar existed keep
-        their unpartitioned layout (0), so reopening them with any
-        ``band_buckets`` value is safe."""
+        band write, so reopening a store with any ``band_buckets`` value
+        is safe. It must be at least 1."""
+        if band_buckets < 1:
+            raise ValueError(f"band_buckets must be >= 1, got {band_buckets}")
         super().__init__(spark, path)
         self.n = n
         self.num_perm = num_perm
@@ -147,13 +143,6 @@ class EdgeStore(BatchStore):
             "max_bucket": self.max_bucket,
             "portable": self.portable,
         }
-
-    def _upgrade_stored_config(self, stored: dict) -> dict:
-        # "portable" joined the identity in round 9; stores persisted
-        # before then (default engine hashing) lack the key — treat
-        # them as portable=False rather than refusing to open.
-        stored.setdefault("portable", False)
-        return stored
 
     # -- write path -------------------------------------------------------
 
@@ -178,8 +167,8 @@ class EdgeStore(BatchStore):
         Old–old pairs are never re-verified; the stored band table is
         SCANNED (map-side, the batch side broadcast under a gate) but
         never recomputed or re-aggregated. Idempotent per batch id; a
-        crash anywhere before the final commit is healed by the retry
-        (all four row-kind partitions are rewritten).
+        crash anywhere before the final commit leaves uncommitted
+        partitions, which the next open or batch write removes.
 
         Per-ingest action budget (r12, guide §5 — the day-batch ingest
         profile showed ~11 driver actions/materializations per batch,
@@ -194,15 +183,6 @@ class EdgeStore(BatchStore):
         instead of checkpoint-then-rewrite. 11 actions → 7."""
         if not self._begin_batch(batch):
             return False
-        # A crashed previous attempt may have left partial batch
-        # partitions. Dynamic-partition-overwrite replaces them only
-        # when the retry produces rows for the partition — an edge
-        # batch can legitimately be EMPTY, so clear stale partials
-        # explicitly (local-filesystem store, same as the swap logic).
-        self._clear_stale_partials(batch)
-        # Stores persisted before the band/count row kinds existed get
-        # a one-time backfill from their committed signature table.
-        self._ensure_band_backfill()
         self._write_sigs(
             D.minhash_signatures(
                 D.shingles(new_docs, text_col, id_col, self.n, portable=self.portable),
@@ -235,7 +215,7 @@ class EdgeStore(BatchStore):
         )
         # materialize candidates once: jaccard_verify counts them and
         # joins them, which would otherwise run the banded join twice
-        cands = self._candidate_pairs(banded_new, mods=mods).localCheckpoint(
+        cands = self._candidate_pairs(banded_new, mods).localCheckpoint(
             eager=True
         )
         # r11: per-doc shingle SETS built row-locally (array_distinct)
@@ -265,21 +245,16 @@ class EdgeStore(BatchStore):
         lineage-free (the write already materialized the pipeline), or
         None when the write produced no rows (Spark writes no partition
         directory for an empty dynamic-overwrite)."""
-        p = os.path.join(self.path, subdir, f"batch={batch}")
-        if not os.path.isdir(p):
-            return None
-        return self.spark.read.parquet(p)
+        p = self._batch_dirs(os.path.join(self.path, subdir)).get(batch)
+        return None if p is None else self.spark.read.parquet(p)
 
-    def _batch_band_mods(self, batch: str) -> list[int] | None:
+    def _batch_band_mods(self, batch: str) -> list[int]:
         """The bh_mod values a batch's band rows touch, read from the
         batch partition's DIRECTORY NAMES — the physical layout already
         encodes exactly the distinct set the candidate join's pruning
-        IN-filter needs, so no distinct+collect job runs (r12).
-        None = unpartitioned legacy layout (no pruning available)."""
-        if self._band_layout() <= 0:
-            return None
-        p = os.path.join(self.path, self.BANDS_SUBDIR, f"batch={batch}")
-        if not os.path.isdir(p):
+        IN-filter needs, so no distinct+collect job runs (r12)."""
+        p = self._batch_dirs(os.path.join(self.path, self.BANDS_SUBDIR)).get(batch)
+        if p is None:
             return []
         return sorted(
             int(d.split("=", 1)[1])
@@ -287,75 +262,13 @@ class EdgeStore(BatchStore):
             if d.startswith("bh_mod=")
         )
 
-    def _clear_stale_partials(self, batch: str) -> None:
-        for sub in (None, self.SIGS_SUBDIR, self.BANDS_SUBDIR, self.COUNTS_SUBDIR):
-            root = self.path if sub is None else os.path.join(self.path, sub)
-            stale = os.path.join(root, f"batch={batch}")
-            if os.path.isdir(stale):
-                shutil.rmtree(stale)
-
-    def _has_committed_parquet(self, subdir: str) -> bool:
-        """True iff the side table holds at least one COMMITTED parquet
-        file. Directory existence is not enough: Spark creates the
-        dataset directory before the job commits, so a crash mid-write
-        leaves the dir present with only ``_temporary`` debris — a
-        state that must read as 'no data' (round-10 advisor
-        finding)."""
-        root = os.path.join(self.path, subdir)
-        if not os.path.isdir(root):
-            return False
-        for dirpath, dirs, files in os.walk(root):
-            dirs[:] = [d for d in dirs if d != "_temporary"]
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
-    def _ensure_band_backfill(self) -> None:
-        """One-time migration for stores persisted before the band /
-        bucket-count row kinds: derive both from the merged signature
-        table into ``batch=base`` partitions. Idempotent (dynamic
-        overwrite of the base partition). Keyed on committed DATA, not
-        directory existence: a crash between the two side writes (or
-        mid-write, leaving an empty dataset dir) re-runs the backfill
-        on the next call, and a signature-table read error PROPAGATES
-        — swallowing it and proceeding would ingest a batch whose
-        band table misses the whole old corpus, silently and
-        permanently losing every old–new candidate pair (round-10
-        advisor finding)."""
-        if not self._has_committed_parquet(self.SIGS_SUBDIR):
-            return  # fresh store, or only cleared partials: nothing to migrate
-        if self._has_committed_parquet(self.BANDS_SUBDIR) and self._has_committed_parquet(
-            self.COUNTS_SUBDIR
-        ):
-            return
-        sigs = self.signatures()
-        banded = D.band_table(
-            sigs, self.num_perm, self.bands, portable=self.portable
-        ).localCheckpoint(eager=True)
-        self._write_bands(banded, self.BASE_BATCH, sign=1)
-        self._write_side(
-            banded.groupBy("band_id", "band_hash").agg(
-                F.count("*").cast("long").alias("cnt")
-            ),
-            self.COUNTS_SUBDIR,
-            self.BASE_BATCH,
-            sign=1,
-        )
-        banded.unpersist()
-
     def _band_layout(self) -> int:
-        """Bucket-partition count of the stored band table (0 =
-        unpartitioned legacy layout). Pinned per store by a sidecar at
-        first band write; stores persisted before the sidecar existed
-        (band data, no sidecar) stay on layout 0 — the layout is
-        physical, so reopening them with any requested
-        ``band_buckets`` never mis-reads."""
+        """Bucket-partition count of the stored band table, pinned per
+        store by a sidecar at first band write — the layout is
+        physical, so reopening with any requested ``band_buckets``
+        never mis-reads."""
         stored = self._read_json(self.BAND_LAYOUT_FILE)
-        if stored is not None:
-            return int(stored["band_buckets"])
-        if self._has_committed_parquet(self.BANDS_SUBDIR):
-            return 0
-        return max(int(self.band_buckets), 0)
+        return self.band_buckets if stored is None else int(stored["band_buckets"])
 
     def _band_mod(self, buckets: int):
         return F.pmod(F.xxhash64(F.col("band_id"), F.col("band_hash")), F.lit(buckets))
@@ -367,9 +280,6 @@ class EdgeStore(BatchStore):
         buckets = self._band_layout()
         if self._read_json(self.BAND_LAYOUT_FILE) is None:
             self._write_raw(self.BAND_LAYOUT_FILE, {"band_buckets": buckets})
-        if buckets <= 0:
-            self._write_side(df, self.BANDS_SUBDIR, batch, sign)
-            return
         (
             df.withColumn("bh_mod", self._band_mod(buckets))
             .withColumn("sign", F.lit(sign).cast("int"))
@@ -380,9 +290,7 @@ class EdgeStore(BatchStore):
             .parquet(os.path.join(self.path, self.BANDS_SUBDIR))
         )
 
-    def _candidate_pairs(
-        self, banded_new: DataFrame, mods: list[int] | None = None
-    ) -> DataFrame:
+    def _candidate_pairs(self, banded_new: DataFrame, mods: list[int]) -> DataFrame:
         """Canonical (id_a < id_b) candidate pairs with at least one
         endpoint in ``banded_new``: the batch's band rows joined
         against the stored band table (which already contains the
@@ -391,10 +299,11 @@ class EdgeStore(BatchStore):
         ``min_agree`` signature-agreement cut on merged signatures.
 
         The stored-side scan prunes to the bucket partitions the batch
-        touches (layout > 0): the batch's distinct ``bh_mod`` values —
-        a driver list bounded by the constant bucket count — become an
-        IN filter on the partition column, so a small maintenance
-        batch reads a fraction of the band table. The rows themselves
+        touches: ``mods``, the batch's distinct ``bh_mod`` values
+        (:meth:`_batch_band_mods`) — a driver list bounded by the
+        constant bucket count — become an IN filter on the partition
+        column, so a small maintenance batch reads a fraction of the
+        band table. The rows themselves
         are read RAW (no sign-fold shuffle): duplicate rows from
         retract/re-ingest cycles collapse in the pair ``distinct()``,
         and pairs whose old endpoint is retracted are dropped
@@ -410,22 +319,11 @@ class EdgeStore(BatchStore):
             .where(F.col("bucket_n") <= self.max_bucket)
             .select("band_id", "band_hash")
         )
-        stored = self.spark.read.parquet(os.path.join(self.path, self.BANDS_SUBDIR))
-        buckets = self._band_layout()
-        if buckets > 0:
-            if mods is None:
-                # caller without a written batch partition to list
-                # (legacy path): derive the touched buckets with a
-                # bounded distinct+collect as before
-                mods = [
-                    r.m
-                    for r in banded_new.select(self._band_mod(buckets).alias("m"))
-                    .distinct()
-                    .collect()
-                ]
-            stored = stored.where(F.col("bh_mod").isin(mods))
-        stored = stored.select("_id", "band_id", "band_hash").join(
-            capped, ["band_id", "band_hash"]
+        stored = (
+            self._read(self.BANDS_SUBDIR)
+            .where(F.col("bh_mod").isin(mods))
+            .select("_id", "band_id", "band_hash")
+            .join(capped, ["band_id", "band_hash"])
         )
         a = banded_new.alias("a")
         b = stored.alias("b")
@@ -485,7 +383,7 @@ class EdgeStore(BatchStore):
         doc per batch and retract negates the one folded live row, so
         the per-id sign-sum is live-occurrence count minus
         retractions."""
-        raw = self.spark.read.parquet(os.path.join(self.path, self.SIGS_SUBDIR))
+        raw = self._read(self.SIGS_SUBDIR)
         return (
             raw.join(ids, "_id", "left_semi")
             .groupBy("_id")
@@ -500,7 +398,7 @@ class EdgeStore(BatchStore):
         fold shuffle is candidate-proportional, not corpus-
         proportional."""
         sig_cols = [f"sig_{i}" for i in range(self.num_perm)]
-        raw = self.spark.read.parquet(os.path.join(self.path, self.SIGS_SUBDIR))
+        raw = self._read(self.SIGS_SUBDIR)
         return (
             raw.join(ids, "_id", "left_semi")
             .groupBy("_id", *sig_cols)
@@ -517,14 +415,13 @@ class EdgeStore(BatchStore):
         any frame carrying ``id_col``."""
         if not self._begin_batch(batch):
             return False
-        self._ensure_band_backfill()
         ids = doc_ids.select(F.col(id_col).alias("_id")).distinct().localCheckpoint(eager=True)
         neg_sigs = self.signatures().join(ids, "_id", "left_semi")
         self._write_sigs(neg_sigs, batch, sign=-1)
         # Negate the retracted documents' LIVE band rows (sign-folded
         # on the id slice only — retracting an absent/already-retracted
         # doc contributes nothing) and their bucket-count deltas.
-        raw_bands = self.spark.read.parquet(os.path.join(self.path, self.BANDS_SUBDIR))
+        raw_bands = self._read(self.BANDS_SUBDIR)
         doc_bands = (
             raw_bands.join(ids, "_id", "left_semi")
             .groupBy("_id", "band_id", "band_hash")
@@ -557,13 +454,9 @@ class EdgeStore(BatchStore):
             .distinct()
         )
         self._write_batch(
-            incident.withColumn("sign", F.lit(-1).cast("int")), batch, commit=False
+            incident.withColumn("sign", F.lit(-1).cast("int")), batch, retraction=True
         )
         ids.unpersist()
-        # record the retraction BEFORE the commit: a crash in between
-        # re-runs both (the batch is not committed yet)
-        self._record_retraction(batch)
-        self._commit(batch)
         return True
 
     def _write_sigs(self, sigs: DataFrame, batch: str, sign: int) -> None:
@@ -585,7 +478,7 @@ class EdgeStore(BatchStore):
         """Merged corpus-lifetime signature table (_id, sig_*):
         sign-sum > 0, retraction negatives folded away."""
         sig_cols = [f"sig_{i}" for i in range(self.num_perm)]
-        raw = self.spark.read.parquet(os.path.join(self.path, self.SIGS_SUBDIR))
+        raw = self._read(self.SIGS_SUBDIR)
         return (
             raw.groupBy("_id", *sig_cols)
             .agg(F.sum("sign").alias("s"))
@@ -600,7 +493,7 @@ class EdgeStore(BatchStore):
         groupBy per ingest. The fold shuffle is sized by the count
         table (one row per touched bucket per batch), not by the
         banded corpus."""
-        raw = self.spark.read.parquet(os.path.join(self.path, self.COUNTS_SUBDIR))
+        raw = self._read(self.COUNTS_SUBDIR)
         return (
             raw.groupBy("band_id", "band_hash")
             .agg(F.sum(F.col("cnt") * F.col("sign")).alias("bucket_n"))
@@ -611,7 +504,7 @@ class EdgeStore(BatchStore):
         """Merged verified edge list (id_a, id_b, jaccard):
         sign-sum > 0. Empty (typed) before any edge exists."""
         try:
-            raw = self.spark.read.parquet(self.path)
+            raw = self._read()
         except Exception:
             # no edge file written yet (first batch had no pairs)
             return self.spark.createDataFrame(
@@ -629,7 +522,6 @@ class EdgeStore(BatchStore):
     def _compact_fold(self, tmp: str) -> None:
         """Fold all four row kinds to ``batch=base`` with sign 1 —
         retraction negatives cancel here."""
-        self._ensure_band_backfill()
         folded_edges = self.edges().select(
             "id_a", "id_b", "jaccard", F.lit(1).cast("int").alias("sign")
         ).withColumn("batch", F.lit(self.BASE_BATCH))
@@ -640,7 +532,7 @@ class EdgeStore(BatchStore):
         folded_sigs.write.mode("overwrite").partitionBy("batch").parquet(
             os.path.join(tmp, self.SIGS_SUBDIR)
         )
-        raw_bands = self.spark.read.parquet(os.path.join(self.path, self.BANDS_SUBDIR))
+        raw_bands = self._read(self.BANDS_SUBDIR)
         folded_bands = (
             raw_bands.groupBy("_id", "band_id", "band_hash")
             .agg(F.sum("sign").alias("s"))
@@ -651,12 +543,8 @@ class EdgeStore(BatchStore):
         )
         # preserve the store's pinned physical layout across compaction
         # (the sidecar itself stays in place)
-        buckets = self._band_layout()
-        band_parts = ["batch"]
-        if buckets > 0:
-            folded_bands = folded_bands.withColumn("bh_mod", self._band_mod(buckets))
-            band_parts.append("bh_mod")
-        folded_bands.write.mode("overwrite").partitionBy(*band_parts).parquet(
+        folded_bands = folded_bands.withColumn("bh_mod", self._band_mod(self._band_layout()))
+        folded_bands.write.mode("overwrite").partitionBy("batch", "bh_mod").parquet(
             os.path.join(tmp, self.BANDS_SUBDIR)
         )
         folded_counts = (

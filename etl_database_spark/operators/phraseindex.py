@@ -138,10 +138,7 @@ class PhraseIndexStore(BatchStore):
         (negated signs under a NEW batch id). Must be called with
         exactly the documents of a previously ingested batch — see
         WinnowStore's docstring for the signed-residue failure mode."""
-        ok = self._write_signed(docs, batch, text_col, id_col, sign=-1)
-        if ok:
-            self._record_retraction(batch)
-        return ok
+        return self._write_signed(docs, batch, text_col, id_col, sign=-1)
 
     def _write_signed(
         self, docs: DataFrame, batch: str, text_col: str, id_col: str, sign: int
@@ -162,7 +159,7 @@ class PhraseIndexStore(BatchStore):
         postings = self._batch_postings(docs, text_col, id_col).select(
             "gram", "_id", F.lit(sign).cast("int").alias("sign")
         )
-        self._write_batch(postings, batch)
+        self._write_batch(postings, batch, retraction=sign < 0)
         return True
 
     # -- read path --------------------------------------------------------
@@ -175,7 +172,7 @@ class PhraseIndexStore(BatchStore):
         lists instead of the whole index (measured 4.3s → posting-
         list-sized at the 10× soak; the sign algebra commutes with
         per-key filtering, so the fold is unchanged)."""
-        raw = self.spark.read.parquet(self.path)
+        raw = self._read()
         if grams is not None:
             raw = raw.where(F.col("gram").isin(list(grams)))
         return (

@@ -13,9 +13,8 @@ store, the streaming embedding store):
   (day, event_type) partials — count / decimal-exact sum / min / max,
   all algebraic, so partials merge associatively — and writes them
   partitioned by ``(batch, day)`` with dynamic-partition-overwrite.
-  Replaying a batch id (pipeline retry, restarted job) replaces its
-  own partitions: idempotent by construction, no manifest needed for
-  crash-safety.
+  Replaying a committed batch id (pipeline retry, restarted job) is a
+  no-op; the manifest is the commit point.
 - :meth:`serve` merges partials on read: a groupBy over the rollup
   store, whose cardinality is days x event types x batches — millions
   of times smaller than the raw events it summarizes.
@@ -32,11 +31,11 @@ design — at scale those go through sketches, not rollups.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_database_spark import commit
 from etl_database_spark.operators.batchstore import BatchStore
 
 # Partial sums are stored at a FIXED wide decimal so every batch file
@@ -143,18 +142,14 @@ class RollupStore(BatchStore):
         """Aggregate one event batch into the store. Returns False if
         this batch id was already COMMITTED (manifest entry, written
         only after a complete write, or absorbed by a compaction) —
-        replays are no-ops. A crash mid-write leaves the batch
-        directory but no manifest entry, so the retry re-runs the
-        dynamic-partition-overwrite and fully replaces the partial —
-        the directory alone must never count as ingested."""
-        # _begin_batch materializes the (possibly empty) manifest
-        # BEFORE the data write: from then on "in the manifest" is the
-        # only ingested signal, so a crash between write and commit
-        # retries cleanly even for the store's very first batch
+        replays are no-ops. The manifest is the commit point: an
+        uncommitted batch's directories are never read, and the next
+        batch write removes them, so the directory alone never counts
+        as ingested."""
         if not self._begin_batch(batch):
             return False
         ev_day = events.withColumn("day", F.to_date(ts_col))
-        self._write_all_partials(ev_day, batch)
+        self._write_all_partials(ev_day, batch, self.path)
         if self.keep_raw:
             raw = ev_day.select(*self._raw_cols()).withColumn("batch", F.lit(batch))
             (
@@ -163,8 +158,6 @@ class RollupStore(BatchStore):
                 .partitionBy("batch", "day")
                 .parquet(os.path.join(self.path, self.RAW_SUBDIR))
             )
-        # commit LAST: a crash anywhere above leaves no manifest entry,
-        # so the retry rewrites the measures and every sketch
         self._commit(batch)
         return True
 
@@ -181,17 +174,18 @@ class RollupStore(BatchStore):
                 cols.append(c)
         return cols
 
-    def _write_all_partials(self, ev_day: DataFrame, batch: str) -> None:
+    def _write_all_partials(self, ev_day: DataFrame, batch: str, root: str) -> None:
         """Write one batch label's measure + sketch partials from an
-        event frame that already carries ``day``. Shared by ingest and
-        the day-recompute retraction — the ONE construction of store
-        rows, so the two paths can never drift."""
+        event frame that already carries ``day``, under ``root`` (the
+        store, or a stage laid out like it). Shared by ingest and the
+        day-recompute retraction — the ONE construction of store rows,
+        so the two paths can never drift."""
         partials = self._partials_from_day(ev_day).withColumn("batch", F.lit(batch))
         (
             partials.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch", "day")
-            .parquet(self.path)
+            .parquet(root)
         )
         if self.distinct_col is not None:
             from etl_database_spark.functions.hll import hll_partials
@@ -203,9 +197,9 @@ class RollupStore(BatchStore):
                 sketch.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch", "day")
-                .parquet(os.path.join(self.path, self.HLL_SUBDIR))
+                .parquet(os.path.join(root, self.HLL_SUBDIR))
             )
-        self._write_qhist(ev_day, batch, sign=1)
+        self._write_qhist(ev_day, batch, sign=1, root=root)
         if self.tdigest_col is not None:
             from etl_database_spark.functions.tdigest import tdigest_partials
 
@@ -216,10 +210,10 @@ class RollupStore(BatchStore):
                 cents.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch", "day")
-                .parquet(os.path.join(self.path, self.TDIGEST_SUBDIR))
+                .parquet(os.path.join(root, self.TDIGEST_SUBDIR))
             )
 
-    def _write_qhist(self, ev_day: DataFrame, batch: str, sign: int) -> None:
+    def _write_qhist(self, ev_day: DataFrame, batch: str, sign: int, root: str) -> None:
         if self.quantile_spec is None:
             return
         from etl_database_spark.functions.histogram import histogram_partials
@@ -243,7 +237,7 @@ class RollupStore(BatchStore):
             hist.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch", "day")
-            .parquet(os.path.join(self.path, self.QHIST_SUBDIR))
+            .parquet(os.path.join(root, self.QHIST_SUBDIR))
         )
 
     def retract(self, events: DataFrame, batch: str, ts_col: str = "ts") -> bool:
@@ -290,12 +284,10 @@ class RollupStore(BatchStore):
         # histogram counters are additive → exactly retractable (unlike
         # MIN/MAX): write the negated counters so served quantiles stay
         # correct after the retraction
-        self._write_qhist(events.withColumn("day", F.to_date(ts_col)), batch, sign=-1)
-        # record the retraction BEFORE the commit: a crash in between
-        # re-runs both (the batch is not committed yet), and recording
-        # is a set union — idempotent
-        self._record_retraction(batch)
-        self._commit(batch)
+        self._write_qhist(
+            events.withColumn("day", F.to_date(ts_col)), batch, sign=-1, root=self.path
+        )
+        self._commit(batch, retraction=True)
         return True
 
     def recomputations(self) -> list[str]:
@@ -312,10 +304,12 @@ class RollupStore(BatchStore):
 
         Requires ``keep_raw=True``. Every day partition the batch
         touched is rebuilt from the retained raw slice minus the
-        batch: the old (batch, day) partials are removed across the
-        measure store and every sketch subdir, and one fresh ``base``
-        partial per affected day is written through the same
-        ``_write_all_partials`` construction ingest uses. Afterward
+        batch: one fresh ``base`` partial per affected day is written
+        into a stage through the same ``_write_all_partials``
+        construction ingest uses, then one ``commit.publish`` replaces
+        the old (batch, day) partials across the measure store and
+        every sketch subdir with it and drops the batch's raw slice —
+        all or nothing. Afterward
         ``serve``/``serve_distinct``/``serve_quantiles*`` are exact
         again — "a bad day costs a day", never a store rebuild.
 
@@ -342,54 +336,61 @@ class RollupStore(BatchStore):
                 "the slice, so a day recompute would resurrect the "
                 "retracted contributions; rebuild the store instead"
             )
-        raw_path = os.path.join(self.path, self.RAW_SUBDIR)
-        raw = self.spark.read.parquet(raw_path)
+        raw = self._read(self.RAW_SUBDIR)
         days = [
             r.day
             for r in raw.where(F.col("batch") == batch).select("day").distinct().collect()
         ]
-        if days:
-            survivors = raw.where(
-                F.col("day").isin(days) & (F.col("batch") != batch)
-            ).drop("batch")
-            # Materialize the surviving slice BEFORE deleting the day
-            # partitions it is read from — the recompute write below
-            # must not race its own input.
-            survivors = survivors.localCheckpoint(eager=True)
-            day_strs = {str(d) for d in days}
-            roots = [self.path] + [
-                os.path.join(self.path, sub)
-                for sub in (self.HLL_SUBDIR, self.QHIST_SUBDIR, self.TDIGEST_SUBDIR)
+        day_dirs = {f"day={d}" for d in days}
+
+        def day_parts(top: str) -> list[str]:
+            # the (batch, day) directories of the affected days in every
+            # measure and sketch root under ``top``
+            return [
+                os.path.join(sub, b, d)
+                for sub in ("", self.HLL_SUBDIR, self.QHIST_SUBDIR, self.TDIGEST_SUBDIR)
+                if os.path.isdir(os.path.join(top, sub))
+                for b in sorted(os.listdir(os.path.join(top, sub)))
+                if b.startswith("batch=")
+                for d in sorted(os.listdir(os.path.join(top, sub, b)))
+                if d in day_dirs
             ]
-            for root in roots:
-                if not os.path.isdir(root):
-                    continue
-                for bdir in os.listdir(root):
-                    if not bdir.startswith("batch="):
-                        continue
-                    for ddir in os.listdir(os.path.join(root, bdir)):
-                        if ddir.startswith("day=") and ddir.split("=", 1)[1] in day_strs:
-                            shutil.rmtree(os.path.join(root, bdir, ddir))
-            self._write_all_partials(survivors, self.BASE_BATCH)
-        # drop the batch's raw slice everywhere (not just the affected
-        # days — the batch is gone)
-        for bdir in (
-            os.listdir(raw_path) if os.path.isdir(raw_path) else []
-        ):
-            if bdir == f"batch={batch}":
-                shutil.rmtree(os.path.join(raw_path, bdir))
-        # the batch stays in the committed manifest: a late replay of
-        # ingest(events, batch) must remain a no-op, not re-add the
-        # retracted contribution
-        self._write_json(
-            self.RECOMPUTED_FILE, sorted(set(self.recomputations()) | {batch})
-        )
+
+        # One publish swaps every affected day partition for its
+        # recompute, drops the batch's raw slice and records the
+        # recomputation; a kill anywhere leaves the store before or after.
+        with commit.staged(self.path) as stage:
+            new, old = os.path.join(stage, "new"), os.path.join(stage, "old")
+            if days:
+                # materialized once: up to four partial writes read it
+                survivors = (
+                    raw.where(F.col("day").isin(days) & (F.col("batch") != batch))
+                    .drop("batch")
+                    .localCheckpoint(eager=True)
+                )
+                self._write_all_partials(survivors, self.BASE_BATCH, new)
+            os.makedirs(new, exist_ok=True)
+            # the batch stays in the committed manifest: a late replay of
+            # ingest(events, batch) must remain a no-op, not re-add the
+            # retracted contribution
+            commit.write_json(os.path.join(new, self.RECOMPUTED_FILE),
+                              sorted(set(self.recomputations()) | {batch}))
+            raw_dir = self._batch_dirs(os.path.join(self.path, self.RAW_SUBDIR)).get(batch)
+            out = day_parts(self.path) + [
+                os.path.relpath(p, self.path)
+                for p in (raw_dir, os.path.join(self.path, self.RECOMPUTED_FILE))
+                if p is not None and os.path.lexists(p)
+            ]
+            moves = [(os.path.join(self.path, p), os.path.join(old, p)) for p in out]
+            moves += [(os.path.join(new, p), os.path.join(self.path, p))
+                      for p in day_parts(new) + [self.RECOMPUTED_FILE]]
+            commit.publish(self.path, moves)
         return sorted(str(d) for d in days)
 
     # -- read path --------------------------------------------------------
 
     def partials(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return self._read()
 
     def serve(
         self, days: list | None = None, include_extrema: bool | None = None
@@ -456,7 +457,7 @@ class RollupStore(BatchStore):
                 f"rollup store {self.path} has no HLL sketch — construct "
                 "RollupStore(..., distinct_col=...) before ingesting"
             )
-        df = self.spark.read.parquet(hll_path)
+        df = self._read(self.HLL_SUBDIR)
         if days is not None:
             df = df.where(F.col("day").isin(days))
         merged = df.groupBy("day", "event_type", "ridx").agg(
@@ -480,8 +481,7 @@ class RollupStore(BatchStore):
                 "buckets)) before ingesting"
             )
         _, lo, hi, buckets = self.quantile_spec
-        qh_path = os.path.join(self.path, self.QHIST_SUBDIR)
-        df = self.spark.read.parquet(qh_path)
+        df = self._read(self.QHIST_SUBDIR)
         if days is not None:
             df = df.where(F.col("day").isin(days))
         merged = (
@@ -510,8 +510,7 @@ class RollupStore(BatchStore):
                 f"rollup store {self.path} has no t-digest centroids — "
                 "construct RollupStore(..., tdigest_col=...) before ingesting"
             )
-        td_path = os.path.join(self.path, self.TDIGEST_SUBDIR)
-        df = self.spark.read.parquet(td_path)
+        df = self._read(self.TDIGEST_SUBDIR)
         if days is not None:
             df = df.where(F.col("day").isin(days))
         merged = tdigest_merge(
@@ -544,7 +543,7 @@ class RollupStore(BatchStore):
         if os.path.isdir(hll_path):
             # fold the sketch too: registers max-merge per key
             folded_hll = (
-                self.spark.read.parquet(hll_path)
+                self._read(self.HLL_SUBDIR)
                 .groupBy("day", "event_type", "ridx")
                 .agg(F.max("max_rho").alias("max_rho"))
                 .withColumn("batch", F.lit(self.BASE_BATCH))
@@ -559,7 +558,7 @@ class RollupStore(BatchStore):
             from etl_database_spark.functions.tdigest import tdigest_merge
 
             folded_td = tdigest_merge(
-                self.spark.read.parquet(td_path).select(
+                self._read(self.TDIGEST_SUBDIR).select(
                     "day", "event_type", "sum_val", "weight"
                 ),
                 ["day", "event_type"],
@@ -572,7 +571,7 @@ class RollupStore(BatchStore):
             # histogram counters fold by SUM; retraction negatives
             # cancel out here, so the compacted base is all-positive
             folded_qh = (
-                self.spark.read.parquet(qh_path)
+                self._read(self.QHIST_SUBDIR)
                 .groupBy("day", "event_type", "bucket")
                 .agg(F.sum("cnt").alias("cnt"))
                 .where(F.col("cnt") != 0)

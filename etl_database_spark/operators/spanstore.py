@@ -72,7 +72,7 @@ class SpanStore(BatchStore):
     ) -> bool:
         """Add one document batch's window counts. Idempotent per batch
         id (manifest commit only after the write); crash partials are
-        fully replaced by the retry."""
+        never read and are swept by the next batch write."""
         return self._write_signed(docs, batch, text_col, id_col, sign=1)
 
     def retract(
@@ -85,10 +85,7 @@ class SpanStore(BatchStore):
         documents of a previously ingested batch: negated counts for
         never-ingested windows leave negative residue that silently
         cancels a FUTURE ingest of the same windows."""
-        ok = self._write_signed(docs, batch, text_col, id_col, sign=-1)
-        if ok:
-            self._record_retraction(batch)
-        return ok
+        return self._write_signed(docs, batch, text_col, id_col, sign=-1)
 
     def _write_signed(
         self, docs: DataFrame, batch: str, text_col: str, id_col: str, sign: int
@@ -98,7 +95,7 @@ class SpanStore(BatchStore):
         counts = self._batch_counts(docs, text_col, id_col).select(
             "h", (F.lit(sign) * F.col("cnt")).cast("long").alias("cnt")
         )
-        self._write_batch(counts, batch)
+        self._write_batch(counts, batch, retraction=sign < 0)
         return True
 
     # -- read path --------------------------------------------------------
@@ -107,7 +104,7 @@ class SpanStore(BatchStore):
         """Merged corpus-lifetime (h, cnt): SUM across batches,
         retraction negatives folded away."""
         return (
-            self.spark.read.parquet(self.path)
+            self._read()
             .groupBy("h")
             .agg(F.sum("cnt").cast("long").alias("cnt"))
             .where(F.col("cnt") > 0)

@@ -35,7 +35,6 @@ No counterpart in the reference repo (training-data extension).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,7 +67,8 @@ class TokenIndexStore(BatchStore):
     ) -> bool:
         """Add one document batch: one tokenize pass feeding both the
         tf postings and the doc-length rows. Idempotent per batch id;
-        crash partials in either root are replaced by the retry."""
+        crash partials in either root are never read and are swept by
+        the next batch write."""
         return self._write_signed(docs, batch, text_col, id_col, sign=1)
 
     def retract(
@@ -78,23 +78,13 @@ class TokenIndexStore(BatchStore):
         dl under a NEW batch id). Must be called with exactly the
         documents of a previously ingested batch — see WinnowStore's
         docstring for the signed-residue failure mode."""
-        ok = self._write_signed(docs, batch, text_col, id_col, sign=-1)
-        if ok:
-            self._record_retraction(batch)
-        return ok
+        return self._write_signed(docs, batch, text_col, id_col, sign=-1)
 
     def _write_signed(
         self, docs: DataFrame, batch: str, text_col: str, id_col: str, sign: int
     ) -> bool:
         if not self._begin_batch(batch):
             return False
-        # a crashed attempt may have left partials that a retry with
-        # no rows for the partition would not overwrite (same guard as
-        # EdgeStore.ingest)
-        for root in (self.path, os.path.join(self.path, self.DOCLEN_SUBDIR)):
-            stale = os.path.join(root, f"batch={batch}")
-            if os.path.isdir(stale):
-                shutil.rmtree(stale)
         toks = B.tokenize_docs(docs, text_col=text_col, id_col=id_col)
         dl = toks.select(
             "_id",
@@ -114,7 +104,7 @@ class TokenIndexStore(BatchStore):
             .agg(F.count("*").alias("tf"))
             .select("tok", "_id", "tf", F.lit(sign).cast("int").alias("sign"))
         )
-        self._write_batch(tf, batch)
+        self._write_batch(tf, batch, retraction=sign < 0)
         return True
 
     # -- read path --------------------------------------------------------
@@ -125,7 +115,7 @@ class TokenIndexStore(BatchStore):
         IN-filter BELOW the sign-fold, into the parquet scan — a query
         then folds only its |Q| posting lists, never the whole index
         (the signed-sum algebra commutes with per-key filtering)."""
-        raw = self.spark.read.parquet(self.path)
+        raw = self._read()
         if toks is not None:
             raw = raw.where(F.col("tok").isin(list(toks)))
         return (
@@ -140,7 +130,7 @@ class TokenIndexStore(BatchStore):
         (so a zero-token document still counts toward N), dl = signed
         sum."""
         return (
-            self.spark.read.parquet(os.path.join(self.path, self.DOCLEN_SUBDIR))
+            self._read(self.DOCLEN_SUBDIR)
             .groupBy("_id")
             .agg(
                 F.sum("sign").alias("_present"),

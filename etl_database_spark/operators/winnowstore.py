@@ -89,7 +89,7 @@ class WinnowStore(BatchStore):
     ) -> bool:
         """Add one document batch's fingerprint postings. Idempotent
         per batch id (manifest commit only after the write); crash
-        partials are fully replaced by the retry."""
+        partials are never read and are swept by the next batch write."""
         return self._write_signed(docs, batch, text_col, id_col, sign=1)
 
     def retract(
@@ -100,10 +100,7 @@ class WinnowStore(BatchStore):
         retraction, served fingerprints and pairs are as if the batch
         never existed. See the module docstring: the documents passed
         here must be exactly a previously ingested batch."""
-        ok = self._write_signed(docs, batch, text_col, id_col, sign=-1)
-        if ok:
-            self._record_retraction(batch)
-        return ok
+        return self._write_signed(docs, batch, text_col, id_col, sign=-1)
 
     def _write_signed(
         self, docs: DataFrame, batch: str, text_col: str, id_col: str, sign: int
@@ -113,7 +110,7 @@ class WinnowStore(BatchStore):
         postings = self._batch_postings(docs, text_col, id_col).select(
             "_id", "fp", F.lit(sign).cast("int").alias("sign")
         )
-        self._write_batch(postings, batch)
+        self._write_batch(postings, batch, retraction=sign < 0)
         return True
 
     # -- read path --------------------------------------------------------
@@ -122,7 +119,7 @@ class WinnowStore(BatchStore):
         """Merged corpus-lifetime postings (_id, fp): SUM of signs
         across batches, retraction negatives folded away."""
         return (
-            self.spark.read.parquet(self.path)
+            self._read()
             .groupBy("_id", "fp")
             .agg(F.sum("sign").alias("s"))
             .where(F.col("s") > 0)

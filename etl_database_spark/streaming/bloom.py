@@ -22,8 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from etl_database_spark.functions import bloom as B
 from etl_database_spark.operators.bloomstore import BloomStore
-from etl_database_spark.streaming.near_dup import _checkpoint_stream_id
-from etl_database_spark.streaming.rollup import _bind
+from etl_database_spark.streaming.near_dup import _bind, _checkpoint_stream_id
 
 
 def run_bloom_once(

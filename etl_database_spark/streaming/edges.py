@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_database_spark.operators.edgestore import EdgeStore
-from etl_database_spark.streaming.near_dup import _checkpoint_stream_id
-from etl_database_spark.streaming.rollup import _bind
+from etl_database_spark.streaming.near_dup import _bind, _checkpoint_stream_id
 
 
 def run_edges_once(

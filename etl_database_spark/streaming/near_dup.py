@@ -27,17 +27,42 @@ exactly once, and the store append is idempotent per batch.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_database_spark import commit
 from etl_database_spark.functions.dedup import (
     band_table as _band_table,  # shared construction — see dedup.band_table
     lsh_candidate_pairs,
     minhash_signatures,
     shingles,
 )
+
+
+def _bind(store_path: str, stream_id: str, kind: str) -> None:
+    """Claim the store for one stream identity (or verify the claim
+    on restart); refuse reuse by a different checkpoint — its batch ids
+    restart at 0 and would collide with stored batches. Shared by every
+    persisted-store stream (``kind`` only labels the refusal message).
+    The marker is written whole or not at all, so a kill mid-claim
+    leaves the store unclaimed, never owned by an empty stream id."""
+    marker = os.path.join(store_path, "_stream_id")
+    if os.path.exists(marker):
+        with open(marker) as fh:
+            owner = json.load(fh)
+        if owner != stream_id:
+            raise ValueError(
+                f"{kind} {store_path} belongs to stream {owner}; "
+                f"refusing reuse by stream {stream_id} (its batch ids "
+                "would overwrite stored batches — use a fresh store path "
+                "or keep the original checkpoint)"
+            )
+        return
+    os.makedirs(store_path, exist_ok=True)
+    commit.write_json(marker, stream_id)
 
 
 def _committed(batch_dir: str) -> bool:
@@ -72,28 +97,10 @@ class SignatureStore:
         self.path = path
         self.num_perm = num_perm
 
-    def _stream_id_path(self) -> str:
-        return os.path.join(self.path, "_stream_id")
-
     def bind(self, stream_id: str) -> None:
         """Claim the store for one stream identity, or verify the
         claim on restart; raise if another stream already owns it."""
-        marker = self._stream_id_path()
-        if os.path.exists(marker):
-            with open(marker) as f:
-                owner = f.read().strip()
-            if owner != stream_id:
-                raise ValueError(
-                    f"signature store {self.path} belongs to stream "
-                    f"{owner}; refusing reuse by stream {stream_id} "
-                    "(its batch ids would overwrite stored batches — "
-                    "use a fresh store path or keep the original "
-                    "checkpoint)"
-                )
-            return
-        os.makedirs(self.path, exist_ok=True)
-        with open(marker, "w") as f:
-            f.write(stream_id)
+        _bind(self.path, stream_id, "signature store")
 
     def _batch_dirs(self) -> list[str]:
         """Committed batch dirs only: a dir holding no ``.parquet``
@@ -272,8 +279,6 @@ def batch_estimate_pairs(
 def _checkpoint_stream_id(checkpoint: str) -> str:
     """The query id Spark persists in <checkpoint>/metadata — stable
     across restarts of the same checkpoint, fresh for a new one."""
-    import json
-
     path = checkpoint[len("file:") :] if checkpoint.startswith("file:") else checkpoint
     with open(os.path.join(path, "metadata")) as f:
         return str(json.load(f)["id"])

@@ -15,8 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_database_spark.operators.phraseindex import PhraseIndexStore
-from etl_database_spark.streaming.near_dup import _checkpoint_stream_id
-from etl_database_spark.streaming.rollup import _bind
+from etl_database_spark.streaming.near_dup import _bind, _checkpoint_stream_id
 
 
 def run_phrase_once(

@@ -12,9 +12,8 @@ exactly-once glue the other persisted-store streams use
   pointed at an existing store would silently collide with stored
   batch partitions; binding refuses that instead of corrupting;
 - a foreachBatch replay of a batch id (crash before the checkpoint
-  commit) is a no-op in ``ingest`` — the first attempt's
-  dynamic-partition-overwrite either completed (content identical) or
-  is fully replaced by the retry write path;
+  commit) is a no-op in ``ingest`` once the first attempt committed;
+  an uncommitted first attempt is swept and rewritten by the retry;
 - serving is the same merge-on-read ``serve()`` as batch, so stream ≡
   batch equivalence is testable row-for-row.
 
@@ -28,36 +27,10 @@ neither externally readable nor unbounded-late-safe.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_database_spark.operators.rollup import RollupStore
-from etl_database_spark.streaming.near_dup import _checkpoint_stream_id
-
-_STREAM_MARKER = "_stream_id"
-
-
-def _bind(store_path: str, stream_id: str, kind: str = "rollup store") -> None:
-    """Claim the store for one stream identity (or verify the
-    claim on restart); refuse reuse by a different checkpoint — its
-    batch ids restart at 0 and would collide with stored batches.
-    Shared by the rollup and bloom store streams (``kind`` only
-    labels the refusal message)."""
-    marker = os.path.join(store_path, _STREAM_MARKER)
-    if os.path.exists(marker):
-        with open(marker) as f:
-            owner = f.read().strip()
-        if owner != stream_id:
-            raise ValueError(
-                f"{kind} {store_path} belongs to stream {owner}; "
-                f"refusing reuse by stream {stream_id} (use a fresh "
-                "store path or keep the original checkpoint)"
-            )
-        return
-    os.makedirs(store_path, exist_ok=True)
-    with open(marker, "w") as f:
-        f.write(stream_id)
+from etl_database_spark.streaming.near_dup import _bind, _checkpoint_stream_id
 
 
 def run_rollup_once(
@@ -72,7 +45,7 @@ def run_rollup_once(
     store = RollupStore(spark, store_path)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        _bind(store_path, _checkpoint_stream_id(checkpoint))
+        _bind(store_path, _checkpoint_stream_id(checkpoint), kind="rollup store")
         if batch_df.isEmpty():
             return
         store.ingest(batch_df, batch=f"s{batch_id}", ts_col=ts_col)

@@ -16,8 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from etl_database_spark.functions import spans as SP
 from etl_database_spark.operators.spanstore import SpanStore
-from etl_database_spark.streaming.near_dup import _checkpoint_stream_id
-from etl_database_spark.streaming.rollup import _bind
+from etl_database_spark.streaming.near_dup import _bind, _checkpoint_stream_id
 
 
 def run_spans_once(

@@ -1,8 +1,11 @@
 """Shared BatchStore lifecycle properties, instantiated for every
 persisted store in the family (SpanStore, WinnowStore, BloomStore,
-DsirStore, RollupStore, IvfIndex, EdgeStore, PhraseIndexStore): idempotent replay, crash-partial
-heal, compaction identity + absorbed-id replay, config identity, and
-swap-failure recovery. Store-specific algebra (equivalence to the
+DsirStore, RollupStore, IvfIndex, EdgeStore, PhraseIndexStore,
+TokenIndexStore): idempotent replay; the manifest is the commit point,
+so an uncommitted batch's directories are never read and are removed
+when the next batch is written, while a reader opening the store
+mid-write removes nothing; compaction identity + absorbed-id replay,
+config identity, retraction bookkeeping and swap-failure recovery. Store-specific algebra (equivalence to the
 one-shot operators, retraction exactness) stays in each store's own
 test module; THESE tests pin the lifecycle contract once."""
 
@@ -59,6 +62,10 @@ class Harness:
 
     def state(self, store):
         raise NotImplementedError
+
+    def reopen(self, spark, path):
+        """A fresh object on an existing store."""
+        return self.make(spark, path)
 
     def reopen_mismatched(self, spark, path):
         """Reopen with different config identity (None = no config)."""
@@ -185,6 +192,11 @@ class IvfHarness(Harness):
     def state(self, store):
         return sorted((r._id, r.centroid) for r in store.lists().collect())
 
+    def reopen(self, spark, path):
+        from etl_database_spark.functions.similarity import IvfIndex
+
+        return IvfIndex.load(spark, path)
+
 
 class EdgeHarness(Harness):
     name = "edge"
@@ -289,27 +301,152 @@ def test_idempotent_replay(spark, tmp_path, harness):
     assert harness.ingest(store, harness.batch_df(spark, 1), BatchStore.BASE_BATCH) is False
 
 
+def _batch_dirs(path, batch):
+    """``batch=<batch>`` directories under the store root and every
+    ``_``-prefixed root."""
+    roots = [path] + [os.path.join(path, d) for d in os.listdir(path) if d.startswith("_")]
+    return [os.path.join(r, f"batch={batch}") for r in roots
+            if os.path.isdir(os.path.join(r, f"batch={batch}"))]
+
+
+#: a committed batch id with a character Spark escapes in directory
+#: names (``:`` is written ``%3A``)
+ESCAPED_ID = "2024-01-01T10:00"
+
+
 def test_crash_partial_heal(spark, tmp_path, harness):
-    """A batch directory WITHOUT a manifest entry (crash between write
-    and commit) is fully replaced by the retry — the directory alone
-    never counts as ingested."""
+    """A batch written but never committed (a kill between the write
+    and the manifest commit): a fresh object on the store serves the
+    state before the write and removes nothing; the retry sweeps the
+    crashed attempt before it writes, so partitions only the crashed
+    attempt wrote never leak into the healed state. The committed
+    batch's id is escaped on disk, and the sweep keeps its data."""
+    path = str(tmp_path / "store")
+    store = harness.make(spark, path)
+    harness.ingest(store, harness.batch_df(spark, 0), ESCAPED_ID)
+    b0_state = harness.state(store)
+    clean = harness.make(spark, str(tmp_path / "clean"))
+    harness.ingest(clean, harness.batch_df(spark, 0), ESCAPED_ID)
+    harness.ingest(clean, harness.batch_df(spark, 1), "b1")
+    expected = harness.state(clean)
+    # simulate the crash: write b1 (with other data than the retry's)
+    # then erase its commit record
+    manifest = os.path.join(path, BatchStore.COMMITTED_FILE)
+    with open(manifest) as fh:
+        before = json.load(fh)
+    harness.ingest(store, harness.batch_df(spark, 2), "b1")
+    with open(manifest, "w") as fh:
+        json.dump(before, fh)
+    crashed = _batch_dirs(path, "b1")
+    assert crashed
+    reopened = harness.reopen(spark, path)
+    assert harness.state(reopened) == b0_state
+    assert _batch_dirs(path, "b1") == crashed
+    # retry must succeed (not see the partial as ingested) and heal
+    assert harness.ingest(reopened, harness.batch_df(spark, 1), "b1") is True
+    assert harness.state(reopened) == expected
+    assert harness.state(harness.reopen(spark, path)) == expected
+
+
+def test_reader_mid_write_removes_nothing(spark, tmp_path, monkeypatch, harness):
+    """Another session opening the store while a batch is written
+    (after its data, before its commit) serves the committed state and
+    deletes nothing of the batch in flight: once the writer commits,
+    every session serves the whole batch."""
     path = str(tmp_path / "store")
     store = harness.make(spark, path)
     harness.ingest(store, harness.batch_df(spark, 0), "b0")
+    b0_state = harness.state(store)
     clean = harness.make(spark, str(tmp_path / "clean"))
     harness.ingest(clean, harness.batch_df(spark, 0), "b0")
     harness.ingest(clean, harness.batch_df(spark, 1), "b1")
     expected = harness.state(clean)
-    # simulate the crash: write b1's data then erase its commit record
-    manifest = os.path.join(path, BatchStore.COMMITTED_FILE)
-    with open(manifest) as fh:
-        before = json.load(fh)
-    harness.ingest(store, harness.batch_df(spark, 1), "b1")
-    with open(manifest, "w") as fh:
-        json.dump(before, fh)
-    # retry must succeed (not see the partial as ingested) and heal
+    seen = []
+    real = BatchStore._commit
+
+    def commit_after_a_reader(self, batch, retraction=False):
+        seen.append(harness.state(harness.reopen(spark, path)))
+        real(self, batch, retraction)
+
+    monkeypatch.setattr(BatchStore, "_commit", commit_after_a_reader)
     assert harness.ingest(store, harness.batch_df(spark, 1), "b1") is True
+    monkeypatch.undo()
+    assert seen == [b0_state]
     assert harness.state(store) == expected
+    assert harness.state(harness.reopen(spark, path)) == expected
+
+
+def test_next_write_sweeps_a_first_batch_crash(spark, tmp_path):
+    """A kill during the first batch's bucket-count write: the
+    signature and band roots hold uncommitted ``batch=b0`` data and the
+    fresh count root holds only Spark's ``_temporary/0``. Reopening
+    removes nothing; the retry sweeps all three roots and lands the
+    batch."""
+    import shutil
+
+    from etl_database_spark.operators.edgestore import EdgeStore
+
+    h = EdgeHarness()
+    path = str(tmp_path / "store")
+    h.ingest(h.make(spark, path), h.batch_df(spark, 0), "b0")
+    expected = h.state(h.reopen(spark, path))
+    with open(os.path.join(path, BatchStore.COMMITTED_FILE), "w") as fh:
+        json.dump([], fh)
+    shutil.rmtree(os.path.join(path, "batch=b0"), ignore_errors=True)
+    shutil.rmtree(os.path.join(path, EdgeStore.COUNTS_SUBDIR))
+    debris = os.path.join(path, EdgeStore.COUNTS_SUBDIR, "_temporary", "0")
+    os.makedirs(debris)
+
+    store = h.reopen(spark, path)
+    assert store.batches() == []
+    assert os.path.isdir(debris) and len(_batch_dirs(path, "b0")) == 2
+    real = store._write_sigs
+
+    def write_after_the_sweep(*args, **kwargs):
+        # the retry's first write: every root of the crash is gone
+        assert not {EdgeStore.SIGS_SUBDIR, EdgeStore.BANDS_SUBDIR,
+                    EdgeStore.COUNTS_SUBDIR} & set(os.listdir(path))
+        real(*args, **kwargs)
+
+    store._write_sigs = write_after_the_sweep
+    assert h.ingest(store, h.batch_df(spark, 0), "b0") is True
+    assert h.state(store) == expected
+
+
+class _Killed(BaseException):
+    """A process kill at a chosen call: no handler swallows it."""
+
+
+@pytest.mark.parametrize("h", [RollupHarness(), SpanHarness()], ids=["rollup", "span"])
+def test_retraction_killed_before_its_commit_is_not_listed(spark, tmp_path, monkeypatch, h):
+    """A kill between the retraction record and the manifest commit
+    leaves an uncommitted batch: the reopened store does not list it
+    as a retraction, serves the state before it (a RollupStore keeps
+    its extrema) and the retry records it."""
+    from etl_database_spark import commit
+
+    path = str(tmp_path / "store")
+    store = h.make(spark, path)
+    df = h.batch_df(spark, 0)
+    h.ingest(store, df, "b0")
+    before = h.state(store)
+    real = commit.write_json
+
+    def killed_at_commit(p, value):
+        if os.path.basename(p) == BatchStore.COMMITTED_FILE:
+            raise _Killed(p)
+        real(p, value)
+
+    monkeypatch.setattr(commit, "write_json", killed_at_commit)
+    with pytest.raises(_Killed):
+        store.retract(df, "rm")
+    monkeypatch.undo()
+
+    reopened = h.reopen(spark, path)
+    assert reopened.retractions() == []
+    assert h.state(reopened) == before
+    assert reopened.retract(df, "rm") is True
+    assert reopened.retractions() == ["rm"]
 
 
 def test_compaction_identity_and_absorbed_replay(spark, tmp_path, harness):

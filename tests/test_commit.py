@@ -269,6 +269,39 @@ def test_batchstore_compact_survives_a_kill_anywhere(spark, tmp_path, kind):
     crash_everywhere(tmp_path, setup, lambda root: make(spark, root).compact(), observe)
 
 
+def test_rollup_retract_batch_survives_a_kill_anywhere(spark, tmp_path):
+    """A ``keep_raw`` RollupStore with an HLL sketch root and batches b0
+    and b1 on two days: ``retract_batch("b1")`` swaps both days'
+    partials in every root, drops b1's raw slice and records the
+    recomputation in one publish."""
+    from etl_database_spark.operators.rollup import RollupStore
+
+    def make(root):
+        return RollupStore(spark, os.path.join(root, "store"), distinct_col="user",
+                           keep_raw=True)
+
+    def events(lo, hi):
+        rows = [(i, dt.datetime(2024, 1, 1 + i % 2, 10), "click" if i % 3 else "buy",
+                 float(i), f"u{i % 5}") for i in range(lo, hi)]
+        return spark.createDataFrame(
+            rows, "event_id long, ts timestamp, event_type string, value double, user string")
+
+    def setup(root):
+        store = make(root)
+        store.ingest(events(0, 8), "b0")
+        store.ingest(events(8, 14), "b1")
+
+    def observe(root):
+        store = make(root)
+        raw = os.path.join(store.path, RollupStore.RAW_SUBDIR)
+        return (sorted(map(tuple, store.serve().collect())),
+                sorted(map(tuple, store.serve_distinct().collect())),
+                store.recomputations(),
+                sorted(d for d in os.listdir(raw) if d.startswith("batch=")))
+
+    crash_everywhere(tmp_path, setup, lambda root: make(root).retract_batch("b1"), observe)
+
+
 def test_dsir_set_target_survives_a_kill_anywhere(spark, tmp_path):
     def setup(root):
         store = _dsir_store(spark, root)

@@ -400,37 +400,6 @@ def test_pagerank_portable_matches_production_and_is_invariant(spark):
     assert got == again
 
 
-def test_edgestore_opens_stores_persisted_before_portable_key(spark, tmp_path):
-    """'portable' joined the config identity in round 9; a store whose
-    on-disk config predates the key must still open (defaulting to
-    portable=False) instead of failing the identity check, and must
-    still refuse a REAL mismatch (reopening as portable=True)."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from etl_database_spark.operators.edgestore import EdgeStore
-    from etl_database_spark.queries import table
-
-    P = dict(n=5, num_perm=32, bands=32, threshold=0.3, min_agree=3)
-    d = table(spark, "/root/testdata/sf0.001", "documents").where(F.col("doc_id") < 60)
-    store = EdgeStore(spark, str(tmp_path / "edges"), **P)
-    assert store.ingest(d, "b0", corpus=d)
-    # simulate a pre-round-9 store: drop the key from the stored config
-    cfg_path = os.path.join(store.path, store.CONFIG_FILE)
-    cfg = json.load(open(cfg_path))
-    del cfg["portable"]
-    tmp = cfg_path + ".tmp"
-    json.dump(cfg, open(tmp, "w"))
-    os.replace(tmp, cfg_path)
-
-    reopened = EdgeStore(spark, str(tmp_path / "edges"), **P)  # must not raise
-    assert reopened.edges().count() == store.edges().count()
-    with pytest.raises(ValueError):
-        EdgeStore(spark, str(tmp_path / "edges"), portable=True, **P)
-
-
 def test_edgestore_candidates_match_reference_incremental(spark, tmp_path):
     """The store's persisted-band candidate path must produce exactly
     the pair set of the reference spec
@@ -463,46 +432,8 @@ def test_edgestore_candidates_match_reference_incremental(spark, tmp_path):
         min_agree=P["min_agree"],
     )
     banded_b1 = D.band_table(sigs_b1, P["num_perm"], P["bands"])
-    got = store._candidate_pairs(banded_b1)
+    got = store._candidate_pairs(banded_b1, store._batch_band_mods("b1"))
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
-
-
-def test_edgestore_band_backfill_migrates_legacy_store(spark, tmp_path):
-    """A store persisted BEFORE the band/count row kinds (simulated by
-    deleting those side tables) must heal on the next ingest via the
-    one-time backfill and produce the same edges as a never-migrated
-    store."""
-    import shutil as sh
-
-    from pyspark.sql import functions as F
-
-    from etl_database_spark.operators.edgestore import EdgeStore
-    from etl_database_spark.queries import table
-
-    P = dict(n=5, num_perm=32, bands=32, threshold=0.3, min_agree=3)
-    d = table(spark, "/root/testdata/sf0.001", "documents").where(
-        F.col("doc_id") < 300
-    )
-
-    def pairset(s):
-        return sorted(map(tuple, s.edges().collect()))
-
-    fresh = EdgeStore(spark, str(tmp_path / "fresh"), **P)
-    legacy = EdgeStore(spark, str(tmp_path / "legacy"), **P)
-    for i in range(2):
-        part = d.where(F.col("doc_id") % 3 == i)
-        corpus = d.where(F.col("doc_id") % 3 <= i)
-        assert fresh.ingest(part, f"b{i}", corpus=corpus)
-        assert legacy.ingest(part, f"b{i}", corpus=corpus)
-    # strip the new row kinds -> pre-migration on-disk layout
-    import os
-
-    for sub in (EdgeStore.BANDS_SUBDIR, EdgeStore.COUNTS_SUBDIR):
-        sh.rmtree(os.path.join(legacy.path, sub))
-    last = d.where(F.col("doc_id") % 3 == 2)
-    assert fresh.ingest(last, "b2", corpus=d)
-    assert legacy.ingest(last, "b2", corpus=d)  # triggers backfill
-    assert pairset(legacy) == pairset(fresh)
 
 
 def test_edgestore_retraction_excluded_at_min_agree_1(spark, tmp_path):
@@ -561,84 +492,6 @@ def test_edgestore_retraction_excluded_at_min_agree_1(spark, tmp_path):
     assert got == want
 
 
-def test_edgestore_backfill_heals_uncommitted_counts_dir(spark, tmp_path):
-    """Crash-mid-write heal: a _bucket_counts directory that EXISTS
-    but holds no committed parquet (Spark creates the dataset dir
-    before the job commits) must read as 'missing' and re-trigger the
-    backfill — under the old os.path.isdir guard it permanently
-    blocked migration while bucket_sizes() failed on every read
-    (round-10 advisor finding)."""
-    import os
-    import shutil as sh
-
-    from pyspark.sql import functions as F
-
-    from etl_database_spark.operators.edgestore import EdgeStore
-    from etl_database_spark.queries import table
-
-    P = dict(n=5, num_perm=32, bands=32, threshold=0.3, min_agree=3)
-    d = table(spark, "/root/testdata/sf0.001", "documents").where(
-        F.col("doc_id") < 300
-    )
-    fresh = EdgeStore(spark, str(tmp_path / "fresh"), **P)
-    crashed = EdgeStore(spark, str(tmp_path / "crashed"), **P)
-    b0 = d.where(F.col("doc_id") % 2 == 0)
-    assert fresh.ingest(b0, "b0", corpus=b0)
-    assert crashed.ingest(b0, "b0", corpus=b0)
-    # simulate the crash state: bands gone, counts dir present but
-    # empty of committed data
-    sh.rmtree(os.path.join(crashed.path, EdgeStore.BANDS_SUBDIR))
-    sh.rmtree(os.path.join(crashed.path, EdgeStore.COUNTS_SUBDIR))
-    os.makedirs(
-        os.path.join(crashed.path, EdgeStore.COUNTS_SUBDIR, "_temporary", "0")
-    )
-    b1 = d.where(F.col("doc_id") % 2 == 1)
-    assert fresh.ingest(b1, "b1", corpus=d)
-    assert crashed.ingest(b1, "b1", corpus=d)  # must heal, not skip
-    assert sorted(map(tuple, crashed.edges().collect())) == sorted(
-        map(tuple, fresh.edges().collect())
-    )
-
-
-def test_edgestore_backfill_read_error_propagates(spark, tmp_path):
-    """A signature-table read failure during the backfill must RAISE:
-    swallowing it and proceeding would band only the new batch and the
-    dir-existence guard would then block the backfill forever — every
-    old-new pair silently and permanently lost (round-10 advisor
-    finding)."""
-    import glob
-    import os
-    import shutil as sh
-
-    from pyspark.sql import functions as F
-
-    from etl_database_spark.operators.edgestore import EdgeStore
-    from etl_database_spark.queries import table
-
-    P = dict(n=5, num_perm=32, bands=32, threshold=0.3, min_agree=3)
-    d = table(spark, "/root/testdata/sf0.001", "documents").where(
-        F.col("doc_id") < 120
-    )
-    store = EdgeStore(spark, str(tmp_path / "edges"), **P)
-    b0 = d.where(F.col("doc_id") % 2 == 0)
-    assert store.ingest(b0, "b0", corpus=b0)
-    # legacy layout with a corrupt signature table: bands/counts gone,
-    # sig parquet replaced by garbage bytes
-    for sub in (EdgeStore.BANDS_SUBDIR, EdgeStore.COUNTS_SUBDIR):
-        sh.rmtree(os.path.join(store.path, sub))
-    parts = glob.glob(
-        os.path.join(store.path, EdgeStore.SIGS_SUBDIR, "batch=*", "*.parquet")
-    )
-    assert parts
-    for p in parts:
-        with open(p, "wb") as fh:
-            fh.write(b"not parquet")
-    with pytest.raises(Exception):
-        store.ingest(d.where(F.col("doc_id") % 2 == 1), "b1", corpus=d)
-    # and the failed attempt must not have committed the batch
-    assert "b1" not in store.batches()
-
-
 def test_edgestore_band_scan_prunes_to_touched_buckets(spark, tmp_path):
     """The candidate join's stored-side scan partition-prunes to the
     bucket partitions the batch touches: for a single-document batch
@@ -668,7 +521,7 @@ def test_edgestore_band_scan_prunes_to_touched_buckets(spark, tmp_path):
     )
     banded = D.band_table(one_doc, P["num_perm"], P["bands"])
     # a 1-doc batch touches <= bands distinct buckets -> <= 4 of 64
-    pairs = store._candidate_pairs(banded)
+    pairs = store._candidate_pairs(banded, store._batch_band_mods("bulk"))
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "bh_mod" in plan, plan
     on_disk = {
@@ -698,29 +551,10 @@ def test_edgestore_band_scan_prunes_to_touched_buckets(spark, tmp_path):
     assert read_dirs and len(read_dirs) < len(on_disk)
 
 
-def test_edgestore_layout_zero_equals_bucketed(spark, tmp_path):
-    """band_buckets is physical only: a store written with the
-    unpartitioned layout (0) serves exactly the edges of the default
-    bucketed store across the same lifecycle."""
-    from pyspark.sql import functions as F
-
+def test_edgestore_rejects_band_buckets_below_one(spark, tmp_path):
+    """The band table is always bucket-partitioned, so a bucket count
+    below 1 is refused at construction."""
     from etl_database_spark.operators.edgestore import EdgeStore
-    from etl_database_spark.queries import table
 
-    P = dict(n=5, num_perm=32, bands=32, threshold=0.3, min_agree=3)
-    d = table(spark, "/root/testdata/sf0.001", "documents").where(
-        F.col("doc_id") < 300
-    )
-    flat = EdgeStore(spark, str(tmp_path / "flat"), band_buckets=0, **P)
-    bucketed = EdgeStore(spark, str(tmp_path / "bucketed"), **P)
-    for i in range(2):
-        part = d.where(F.col("doc_id") % 2 == i)
-        corpus = d.where(F.col("doc_id") % 2 <= i)
-        assert flat.ingest(part, f"b{i}", corpus=corpus)
-        assert bucketed.ingest(part, f"b{i}", corpus=corpus)
-    assert sorted(map(tuple, flat.edges().collect())) == sorted(
-        map(tuple, bucketed.edges().collect())
-    )
-    # the pinned layouts differ and survive reopening
-    assert flat._band_layout() == 0
-    assert bucketed._band_layout() == 64
+    with pytest.raises(ValueError, match="band_buckets"):
+        EdgeStore(spark, str(tmp_path / "edges"), band_buckets=0)

@@ -370,44 +370,6 @@ def test_ivf_compact_preserves_answers_and_blocks_replay(spark, tmp_path):
     assert reloaded.append(d2, batch="d2") is False
 
 
-def test_ivf_append_seeds_manifest_for_pre_manifest_store(spark, tmp_path):
-    """A store written before the manifest existed (no _committed.json,
-    batches() falls back to directory listing) must not lose its base
-    and legacy batches when append seeds the manifest: after a later
-    compact(), the absorbed-ids list must include the legacy ids so a
-    late replay of a legacy batch stays a no-op (no duplicate
-    vectors)."""
-    import json
-    import os
-
-    from etl_database_spark.functions.similarity import IvfIndex, kmeans_fit
-
-    rows = _mk_vectors()
-    schema = "vec_id long, embedding array<float>"
-    base = spark.createDataFrame(rows[:100], schema)
-    legacy = spark.createDataFrame(rows[100:150], schema)
-    new = spark.createDataFrame(rows[150:], schema)
-
-    cents = kmeans_fit(base, DIM, k=6, max_iter=5)
-    idx = IvfIndex.build(spark, base, cents, str(tmp_path / "ivf"))
-    idx.append(legacy, batch="legacy")
-    # simulate a pre-manifest store: the manifest file never existed
-    os.remove(os.path.join(idx.path, IvfIndex.COMMITTED_FILE))
-
-    assert idx.append(new, batch="new") is True
-    with open(os.path.join(idx.path, IvfIndex.COMMITTED_FILE)) as fh:
-        committed = json.load(fh)
-    assert {"base", "legacy", "new"} <= set(committed)
-
-    idx.compact()
-    with open(os.path.join(idx.path, IvfIndex.COMPACTED_FILE)) as fh:
-        absorbed = json.load(fh)
-    assert "legacy" in absorbed
-    n = idx.lists().count()
-    assert idx.append(legacy, batch="legacy") is False  # late replay: no-op
-    assert idx.lists().count() == n == len(rows)
-
-
 def test_ivf_compact_files_per_list_splits_lists(spark, tmp_path):
     """files_per_list > 1 must actually produce multiple files per
     inverted list (the salt split), not just cap total parallelism."""

@@ -393,3 +393,42 @@ def test_hopping_stream_matches_batch(spark, tmp_path):
     }
     for k, v in want.items():
         assert got.get(k) == v, k
+
+
+def test_stream_bind_torn_marker_write_leaves_store_unclaimed(tmp_path, monkeypatch):
+    """A kill while the stream-id marker is being written must not
+    leave an empty marker that refuses every later ``bind``: the next
+    bind claims the store, and a foreign stream is still refused."""
+    import builtins
+
+    from etl_database_spark.streaming.near_dup import SignatureStore
+
+    real_open = builtins.open
+
+    class Torn:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def write(self, text):
+            self.fh.write(text[:1])
+            raise OSError("killed mid-write")
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+    def torn_open(path, mode="r", *args, **kwargs):
+        fh = real_open(path, mode, *args, **kwargs)
+        return Torn(fh) if "w" in mode and "_stream_id" in str(path) else fh
+
+    store = SignatureStore(None, str(tmp_path / "store"))
+    monkeypatch.setattr(builtins, "open", torn_open)
+    with pytest.raises(OSError, match="killed mid-write"):
+        store.bind("stream-1")
+    monkeypatch.undo()
+    store.bind("stream-1")
+    SignatureStore(None, str(tmp_path / "store")).bind("stream-1")
+    with pytest.raises(ValueError, match="belongs to stream stream-1"):
+        store.bind("stream-2")
